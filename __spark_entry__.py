@@ -30,7 +30,6 @@ from unsupervised_ner_spark.ops import dedup, multimodal, simsearch, textstats  
 from unsupervised_ner_spark.pipeline import mentions as M  # noqa: E402
 from unsupervised_ner_spark.pipeline.runner import run_pipeline  # noqa: E402
 from unsupervised_ner_spark.pipeline.text import pages_to_sentences  # noqa: E402
-from unsupervised_ner_spark.pipeline.typing_sql import typed_mentions_relational  # noqa: E402
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -125,9 +124,9 @@ def q_kg_masks(spark, sf_dir):
 
 
 def q_kg_typed_mentions(spark, sf_dir):
-    s = _sentences(spark, sf_dir)
-    m = M.tokens_to_mentions(M.sentences_to_tokens(s))
-    typed = typed_mentions_relational(m, s, spark)
+    """Typed mentions from the narrow production tagging pass, gated
+    directly against the DuckDB typing oracle."""
+    typed = _typed_production(spark, sf_dir)
     return typed.select(
         "url",
         F.col("sent_idx").cast("long").alias("sent_idx"),
@@ -153,9 +152,9 @@ def q_kg_cooccurrence_npmi(spark, sf_dir):
 def q_kg_cooccurrence(spark, sf_dir):
     """Sentence-level entity co-occurrence edges over canonical entities
     (the predicate-less KG graph product). Feeds off the narrow production
-    tagging pass like the ER queries (VERDICT r04 item 2) — equivalence
-    with the relational typing chain is hash-proven by kg_typed_mentions +
-    kg_bio_tags; the oracle replays normalized surfaces so it is chain-
+    tagging pass like the ER queries (VERDICT r04 item 2), which
+    kg_typed_mentions + kg_bio_tags gate directly against the DuckDB
+    typing oracle; the oracle replays normalized surfaces so it is chain-
     agnostic."""
     from unsupervised_ner_spark.pipeline import er
 
@@ -1373,26 +1372,12 @@ def q_er_cluster_stats(spark, sf_dir):
     return er.cluster_stats(membership)
 
 
-def q_kg_ensemble_mentions(spark, sf_dir):
-    """Two-model relational ensemble (J5/J6/O4) vs full SQL oracle."""
-    from unsupervised_ner_spark.pipeline.ensemble_sql import ensemble_mentions_relational
-
-    s = _sentences(spark, sf_dir)
-    m = M.tokens_to_mentions(M.sentences_to_tokens(s))
-    out = ensemble_mentions_relational(m, s, spark)
-    return out.select(
-        "url",
-        F.col("sent_idx").cast("long").alias("sent_idx"),
-        F.col("mention_idx").cast("long").alias("mention_idx"),
-        "surface", "pred_a", "pred_b", "resolution",
-    )
-
-
 def q_kg_ensemble_mentions_prod(spark, sf_dir):
-    """Production-path ensemble: two detail-mode kernel tagging passes +
-    the SHARED resolution-maze Column implementation, gated against the
-    SAME full SQL oracle as kg_ensemble_mentions — a three-way
-    cross-validation (kernel / relational twin / DuckDB) of J5."""
+    """Two-model ensemble (J5/J6/O4): two detail-mode kernel tagging
+    passes + the resolution-maze Column implementation
+    (pipeline/ensemble_rules.py), gated directly against the full SQL
+    oracle. Registered as both kg_ensemble_mentions and
+    kg_ensemble_mentions_prod."""
     from unsupervised_ner_spark.pipeline import ensemble as E
     from unsupervised_ner_spark.pipeline.tagging import tag_sentences
 
@@ -1440,10 +1425,9 @@ def q_kg_ensemble_reconciled(spark, sf_dir):
 
 
 def _typed_production(spark, sf_dir):
-    """Typed mentions from the narrow production tagging pass — the ER
-    queries feed off this instead of a relational typing re-derivation
-    (equivalence of the two chains is itself hash-proven by
-    kg_typed_mentions + kg_bio_tags)."""
+    """Typed mentions from the narrow production tagging pass — the one
+    typing implementation; kg_typed_mentions gates it directly against the
+    DuckDB typing oracle, and the ER queries feed off it."""
     from unsupervised_ner_spark.pipeline.runner import typed_mentions_from_tagged
 
     pages = _docs_as_pages(spark, sf_dir)
@@ -2947,8 +2931,8 @@ def q_er_entity_linking(spark, sf_dir):
     band) + levenshtein<=2 verify against the BROADCAST KB dim; per-node
     argmin as a map-side-combining min(struct) — no corpus shuffle for
     candidate generation."""
+    from unsupervised_ner_spark.descriptors import FIXTURES_DIR
     from unsupervised_ner_spark.pipeline import er
-    from unsupervised_ner_spark.pipeline.typing_sql import load_fixture_tables
 
     typed = _typed_production(spark, sf_dir)
     occ = er.entity_occurrences(
@@ -2957,7 +2941,7 @@ def q_er_entity_linking(spark, sf_dir):
     nodes = er.exact_canonical(occ).select(
         "node_id", "norm_surface", "etype", "n_mentions"
     )
-    _, sig, _ = load_fixture_tables(spark, "a100")
+    sig = spark.read.parquet(str(FIXTURES_DIR / "entity_signatures_a100.parquet"))
     return er.link_entities_to_kb(nodes, sig)
 
 
@@ -6096,7 +6080,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_entity_contexts": q_kg_entity_contexts,
         "kg_entity_trends": q_kg_entity_trends,
         "er_cluster_stats": q_er_cluster_stats,
-        "kg_ensemble_mentions": q_kg_ensemble_mentions,
+        "kg_ensemble_mentions": q_kg_ensemble_mentions_prod,
         "kg_ensemble_mentions_prod": q_kg_ensemble_mentions_prod,
         "kg_ensemble_v1_tags": q_kg_ensemble_v1_tags,
         "kg_ensemble_reconciled": q_kg_ensemble_reconciled,

@@ -115,7 +115,7 @@ def test_top_prediction_formats():
 
 def test_sort_tie_break_is_label_asc():
     # equal scores break ties by label ASC — the deterministic cross-engine
-    # rule shared with typing_sql/oracle_sql (deliberate divergence from the
+    # rule shared with oracle_sql (deliberate divergence from the
     # reference's insertion-order stable sort, batched_main_NER.py:636;
     # see kernel/typing.py module docstring)
     descs = [("x", 1.0)]

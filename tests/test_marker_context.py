@@ -1,10 +1,12 @@
 """Three-way parity on MARKER corpora (":__entity__" tagging), including
 bare markers with empty surfaces — the context-key path (ADVICE r01: the
-production kernel, the relational twin, and the DuckDB oracle must agree on
-corpora containing markers, which the driver's sf tables never exercise).
+single-process kernel, the Spark tagging pass, and the DuckDB oracle must
+agree on corpora containing markers, which the driver's sf tables never
+exercise).
 
-Legs compared per mention: (1) the production kernel (OracleTagger),
-(2) typed_mentions_relational, (3) oracle_sql.kg_typed_mentions via DuckDB.
+Legs compared per mention: (1) the single-process kernel (OracleTagger),
+(2) the Spark kernel UDF (run_pipeline -> typed_mentions_from_tagged),
+(3) oracle_sql.kg_typed_mentions via DuckDB.
 """
 
 from __future__ import annotations
@@ -16,9 +18,7 @@ from pyspark.sql import functions as F
 from unsupervised_ner_spark import dims, oracle_sql
 from unsupervised_ner_spark.descriptors import FixtureDescriptorProvider
 from unsupervised_ner_spark.kernel.oracle import OracleTagger
-from unsupervised_ner_spark.pipeline.mentions import sentences_to_tokens, tokens_to_mentions
-from unsupervised_ner_spark.pipeline.text import pages_to_sentences
-from unsupervised_ner_spark.pipeline.typing_sql import typed_mentions_relational
+from unsupervised_ner_spark.pipeline.runner import run_pipeline, typed_mentions_from_tagged
 
 MARKER_LINES = [
     # trailing bare marker: context key = previous word ("parkinsons")
@@ -34,6 +34,9 @@ MARKER_LINES = [
     "Imatinib :__entity__ :__entity__",
     # numeric surface next to a bare marker
     "60 :__entity__",
+    # surface "eGFR" after the bare marker keyed on "egfr" above: the
+    # tagger's memo must not hand it that marker's OOV CI side
+    "A eGFR below 60 indicates chronic kidney disease",
 ]
 
 
@@ -44,23 +47,22 @@ def docs(spark):
 
 
 @pytest.fixture(scope="module")
-def relational(spark, docs):
+def spark_typed(spark, docs):
     pages = docs.select(
         F.col("doc_id").cast("string").alias("url"),
         F.lit(None).cast("timestamp").alias("warc_ts"),
         F.lit(None).cast("binary").alias("html"),
         "text", "lang",
     )
-    s = pages_to_sentences(pages)
-    m = tokens_to_mentions(sentences_to_tokens(s))
-    typed = typed_mentions_relational(m, s, spark)
+    stages = run_pipeline(pages, lang_filter=None)
+    typed = typed_mentions_from_tagged(stages["tagged"])
     return {
         (r.url, r.sent_idx, r.mention_idx): (r.surface, r.prediction)
         for r in typed.collect()
     }
 
 
-def test_relational_matches_kernel(spark, docs, relational):
+def test_spark_typed_matches_kernel(spark, docs, spark_typed):
     tagger = OracleTagger(
         FixtureDescriptorProvider.load("a100"),
         dims.load_entity_map(),
@@ -72,12 +74,12 @@ def test_relational_matches_kernel(spark, docs, relational):
         res = tagger.tag_sentence(r.text.strip())
         for mi, m in enumerate(res.mentions):
             expected[(str(r.doc_id), 0, mi)] = (m.surface, m.prediction)
-    assert relational == expected
+    assert spark_typed == expected
     # the context-key path must actually type something (not all OTHER)
     assert any(p != "OTHER" for _, p in expected.values())
 
 
-def test_relational_matches_duckdb_oracle(spark, docs, relational, tmp_path):
+def test_spark_typed_matches_duckdb_oracle(spark, docs, spark_typed, tmp_path):
     pq = str(tmp_path / "documents.parquet")
     docs.toPandas().to_parquet(pq)
     con = duckdb.connect()
@@ -86,7 +88,7 @@ def test_relational_matches_duckdb_oracle(spark, docs, relational, tmp_path):
         (r.url, r.sent_idx, r.mention_idx): (r.surface, r.prediction)
         for r in con.sql(oracle_sql.kg_typed_mentions()).df().itertuples()
     }
-    assert got == relational
+    assert got == spark_typed
 
 
 def test_oov_descs_are_signature_misses():
@@ -101,13 +103,13 @@ def test_oov_descs_are_signature_misses():
         assert hits == [], f"OOV descs present in {model} signatures: {hits}"
 
 
-def test_bare_marker_context_key_types_from_context(relational):
+def test_bare_marker_context_key_types_from_context(spark_typed):
     # "Parkinsons :__entity__": the bare-marker mention (empty surface) must
     # inherit a context-keyed type, not collapse to OTHER
-    bare = [v for k, v in relational.items() if k[0] == "0" and v[0] == ""]
+    bare = [v for k, v in spark_typed.items() if k[0] == "0" and v[0] == ""]
     assert len(bare) == 1
     assert bare[0][1] != "OTHER"
     # sentence-initial bare marker has no context -> OOV -> OTHER
-    initial = [v for k, v in relational.items() if k[0] == "1" and v[0] == ""]
+    initial = [v for k, v in spark_typed.items() if k[0] == "1" and v[0] == ""]
     assert len(initial) == 1
     assert initial[0][1] == "OTHER"

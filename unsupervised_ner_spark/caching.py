@@ -27,7 +27,6 @@ Thread-local so parallel test workers can't release each other's handles.
 
 from __future__ import annotations
 
-import os
 import threading
 from contextlib import contextmanager
 from typing import Callable
@@ -69,7 +68,6 @@ def scoped_persist(
     df: DataFrame,
     level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
     how: str = "persist",
-    tunable: bool = False,
 ) -> DataFrame:
     """Persist ``df`` and hand ownership to the active cache scope (if any).
 
@@ -78,23 +76,10 @@ def scoped_persist(
     raw block write, measured 2× cheaper for string-heavy mention-scale
     intermediates; lineage truncation is acceptable for these bounded
     intermediates — an executor loss costs a stage retry, the standard
-    iterative-algorithm tradeoff).
-
-    Measured at sf0.1 (r03 experiment, VERDICT r02 item 2):
-    kg_typed_mentions persist/off/checkpoint = 66.6/29.1/33.0 s;
-    kg_ensemble_mentions = 32.5/283.0/23.4 s — so single-consumer chains
-    skip persistence entirely and multi-consumer chains checkpoint.
-
-    ``tunable=True`` opts this call site into the ``TYPED_PERSIST_MODE``
-    env override ("off"/"checkpoint"/"persist") used by the measurement
-    harness. Sites whose persistence is a correctness/scale invariant (the
-    LSH banded table, ER node canonicalization — a 4× recompute without it)
-    leave it False so a typing measurement can't silently degrade unrelated
-    operators in the same session (ADVICE r03)."""
-    mode = os.environ.get("TYPED_PERSIST_MODE", how) if tunable else how
-    if mode == "off":
-        return df
-    if mode == "checkpoint":
+    iterative-algorithm tradeoff). Single-consumer chains skip
+    persistence entirely; multi-consumer chains (the ensemble's branch A)
+    checkpoint."""
+    if how == "checkpoint":
         df = df.localCheckpoint(eager=False)
         _register(df, _release_checkpoint)
         return df

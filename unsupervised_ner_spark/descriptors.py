@@ -124,8 +124,13 @@ class FixtureDescriptorProvider:
         """Typing-result memoization key: this provider's descriptors are a
         pure function of the derived key (numeric/OOV collapse to
         sentinels), so per-mention typing results can be cached. Context-
-        sensitive providers (real MLM) must return None."""
-        return self._key(surface, context)
+        sensitive providers (real MLM) must return None.
+
+        A bare-marker mention keys only its CS side on the context word; its
+        CI probe has no mask and is always OOV. Its key is therefore kept
+        apart from a surface-keyed mention whose head is the same word."""
+        key = self._key(surface, context)
+        return key if surface.split() else "\x00ctx" + key
 
 
 class HFBertDescriptorProvider:

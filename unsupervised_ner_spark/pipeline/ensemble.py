@@ -4,10 +4,10 @@ Re-expresses ensemble/aggregate_server_json.py end-to-end:
 - thread fan-out to 2 NER servers (:416-457)  -> two DataFrame branches
 - the FULL resolution maze — layer-1 server pick + layer-2
   gen_resolved_entity emission chain — lives in
-  ``pipeline/ensemble_rules.py`` (one Column-algebra implementation shared
-  with the relational twin ``ensemble_sql.py``; rule-by-rule citations
-  there), driven here by the per-mention packed CS/CI distributions the
-  tagging stage now carries (MENTION.cs_dist/ci_dist).
+  ``pipeline/ensemble_rules.py`` (one Column-algebra implementation;
+  rule-by-rule citations there), driven here by the per-mention packed
+  CS/CI distributions the tagging stage now carries
+  (MENTION.cs_dist/ci_dist).
 - span re-sync ("Picking min span length", :84-88 + get_span_info
   :500-517): the two branches share mention detection (same tokenizer), so
   spans align by construction — but the join deliberately keys on
@@ -84,7 +84,7 @@ def ensemble_tags(
     # branch A feeds both the mention join and the token emission (two
     # consumers) -> lazy localCheckpoint; branch B is single-consumer
     ta = scoped_persist(
-        tag_sentences(sentences, model=model_a, detail=True), how="checkpoint", tunable=True
+        tag_sentences(sentences, model=model_a, detail=True), how="checkpoint"
     )
     tb = tag_sentences(sentences, model=model_b, detail=True)
     resolved = resolve_ensemble(_mention_rows(ta, "a"), _mention_rows(tb, "b"))

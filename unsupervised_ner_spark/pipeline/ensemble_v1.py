@@ -135,7 +135,7 @@ def ensemble_v1_tags(
     # consumers, so it takes a lazy localCheckpoint (caching policy); branch
     # B is single-consumer and stays unmaterialized
     ta = scoped_persist(
-        tag_sentences(sentences, model=model_a, detail=False), how="checkpoint", tunable=True
+        tag_sentences(sentences, model=model_a, detail=False), how="checkpoint"
     )
     tb = tag_sentences(sentences, model=model_b, detail=False)
     j = mention_rows(ta, "a").join(
