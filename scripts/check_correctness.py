@@ -20,6 +20,15 @@ sys.path.insert(0, str(REPO))
 import __spark_entry__ as entry  # noqa: E402
 from unsupervised_ner_spark.session import get_spark  # noqa: E402
 
+# DuckDB's default memory limit is 80% of RAM; on a shared 16 GB host one
+# oracle that re-inlines a multi-referenced CTE can take all of it. Cap it,
+# and give it a spill directory under the repo so operators that can spill
+# go to disk instead. Measured with DuckDB 1.0 on 4 threads: the ER pair
+# oracles (er_pair_features, er_phonetic_pairs, er_fs_patterns,
+# er_fs_em_round) fail at 4GB and pass at 6GB (peak RSS ~2.2 GB).
+DUCKDB_MEMORY_LIMIT = "6GB"
+DUCKDB_TEMP_DIR = REPO / ".duckdb_spill"
+
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",
@@ -38,7 +47,10 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     spark = get_spark("check_correctness", cores=16, shuffle_partitions=16)
-    con = duckdb.connect()
+    con = duckdb.connect(config={
+        "memory_limit": DUCKDB_MEMORY_LIMIT,
+        "temp_directory": str(DUCKDB_TEMP_DIR),
+    })
     for t in TABLES:
         con.sql(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"

@@ -57,7 +57,7 @@ def test_cache_key_is_none(provider):
 
 def test_tag_sentences_end_to_end_with_hf_provider(spark):
     """The full production tagging stage with provider_factory=HF(fakes):
-    three sentences through mapInPandas on executors -> BIO tags emitted."""
+    three sentences through the tagging mapInArrow on executors -> BIO tags emitted."""
     from unsupervised_ner_spark.pipeline.tagging import tag_sentences
 
     s = spark.createDataFrame(

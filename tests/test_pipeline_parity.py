@@ -77,24 +77,60 @@ def test_sentences_match_oracle_splitting(spark, pages, stages):
     assert got == expected
 
 
-def test_tagged_matches_oracle(stages, oracle):
-    """Token-level BIO parity + mention-level prediction parity."""
-    tagged = stages["tagged"].collect()
-    assert len(tagged) > 0
-    for row in tagged:
+def kernel_mention(m, detail: bool = True) -> dict:
+    """The kernel's MentionResult as the tagged row's mention struct
+    (MENTION when ``detail``, else MENTION_SLIM)."""
+    out = {
+        "begin_tok": m.begin_tok,
+        "end_tok": m.end_tok,
+        "surface": m.surface,
+        "prediction": m.prediction,
+    }
+    if not detail:
+        return {**out, "conf": m.pooled[0][1] if m.pooled else 1.0}
+    return {
+        **out,
+        "masked_sent": m.masked_sentence,
+        "ci_probe": m.ci_probe,
+        "pooled": [
+            {"e": e, "confidence": c,
+             "stypes": [{"st": st, "factor": f} for st, f in stypes]}
+            for e, c, stypes in m.pooled
+        ],
+        "cs_dist": [{"e": e, "conf": c} for e, c in m.cs_dist],
+        "ci_dist": [{"e": e, "conf": c} for e, c in m.ci_dist],
+    }
+
+
+def assert_tagged_equals_kernel(rows, oracle, detail: bool) -> None:
+    """Every tagged row equals the single-process kernel's result for its
+    sentence: tokens, span bits, tags and every mention field."""
+    for row in rows:
         o = oracle.tag_sentence(row.sent)
+        assert row.sent == o.text
         assert row.words == o.words, row.sent
         assert row.span_arr == o.span_arr, row.sent
         assert row.tags == o.tags, row.sent
-        assert len(row.mentions) == len(o.mentions)
-        for sm, om in zip(row.mentions, o.mentions):
-            assert sm.surface == om.surface
-            assert sm.masked_sent == om.masked_sentence
-            assert sm.ci_probe == om.ci_probe
-            assert sm.prediction == om.prediction
-            assert [(p.e, p.confidence) for p in sm.pooled] == [
-                (e, c) for e, c, _ in om.pooled
-            ]
+        got = [m.asDict(recursive=True) for m in row.mentions]
+        assert got == [kernel_mention(m, detail) for m in o.mentions], row.sent
+
+
+def test_tagged_matches_oracle(stages, oracle):
+    """Token-level BIO parity + every MENTION field against the kernel."""
+    tagged = stages["tagged"].collect()
+    assert len(tagged) > 0
+    assert any(m.pooled and m.pooled[0].stypes for r in tagged for m in r.mentions)
+    assert any(m.cs_dist and m.ci_dist for r in tagged for m in r.mentions)
+    assert_tagged_equals_kernel(tagged, oracle, detail=True)
+
+
+def test_slim_tagged_matches_oracle(pages, oracle):
+    """detail=False: every MENTION_SLIM field, ``conf`` = top pooled
+    confidence (1.0 when nothing is pooled)."""
+    tagged = run_pipeline(pages, lang_filter=None, detail=False)["tagged"].collect()
+    assert len(tagged) > 0
+    assert sum(len(r.mentions) for r in tagged) > 0
+    assert_tagged_equals_kernel(tagged, oracle, detail=False)
 
 
 def test_sql_mentions_agree_with_udf_path(spark, stages):

@@ -1,0 +1,104 @@
+"""Adversarial pages through the narrow chain (pages -> sentences ->
+tagging): degenerate and extreme inputs must not throw under either tagged
+schema, and every tagged row must equal the single-process kernel's."""
+
+import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
+from test_pipeline_parity import assert_tagged_equals_kernel
+
+from unsupervised_ner_spark import dims
+from unsupervised_ner_spark.descriptors import FixtureDescriptorProvider
+from unsupervised_ner_spark.kernel.oracle import OracleTagger, add_term_punct
+from unsupervised_ner_spark.pipeline.runner import run_pipeline
+
+PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
+
+# ~10k tokens, 3 mentions. Every detail-mode mention carries its masked
+# sentence, so a row grows with mentions x sentence length: a mention-dense
+# 10k-token sentence (3,401 mentions) is a ~280 MB row, more than a test
+# collect can hold on the suite's driver heap.
+LONG_SENT = " ".join(
+    ["Mesothelioma"] + ["the", "of", "and", "to"] * 1250
+    + ["asbestos"] + ["in", "on", "at", "by"] * 1250 + ["Imatinib"]
+)
+NO_MENTIONS = "the of and to\nit is in on\nwe are at by"  # stopwords only
+
+LINES = [
+    "",
+    "x",
+    "Mesothelioma is caused by asbestos exposure",  # no terminal punctuation
+    "Aspirin reduces fever in patients.",
+    "The patient was treated with imatinib",
+    "Мезотелиома вызвана асбестом",  # Cyrillic
+    "石棉导致间皮瘤。",  # CJK, no ASCII whitespace
+    "التهاب الكبد فيروسي",  # Arabic
+    "Ölçüm 42 mg/dL çıktı",
+    "!!!",
+    "a",
+    "the of and to",
+]
+
+page_text = st.one_of(
+    st.just(""),
+    st.lists(st.sampled_from(LINES), min_size=1, max_size=5).map("\n".join),
+)
+pages_strategy = st.lists(
+    st.tuples(page_text, st.sampled_from([None, "en", "de"])),
+    min_size=1,
+    max_size=4,
+)
+
+
+@pytest.fixture(scope="module")
+def oracle():
+    return OracleTagger(
+        FixtureDescriptorProvider.load("a100"),
+        dims.load_entity_map(),
+        dims.load_signatures("a100"),
+        punct_terminate=False,
+    )
+
+
+def expected_sentences(pages) -> dict:
+    """Single-process sentence split (one sentence per line, trimmed,
+    longer than one char, punct-terminated)."""
+    out = {}
+    for n, (text, _lang) in enumerate(pages):
+        for i, line in enumerate(text.split("\n")):
+            line_s = line.strip(" ")
+            if len(line_s) > 1:
+                out[(f"u{n}", i)] = add_term_punct(line_s)
+    return out
+
+
+@settings(max_examples=12, deadline=None)
+@given(pages=pages_strategy)
+@example(pages=[("", None)])
+@example(pages=[("x", "en")])
+@example(pages=[("Mesothelioma is caused by asbestos exposure", None)])
+@example(pages=[(LONG_SENT, "en")])
+@example(pages=[("Мезотелиома вызвана асбестом\n石棉导致间皮瘤。", None)])
+@example(pages=[(NO_MENTIONS, "en"), ("the of and to", None)])
+def test_narrow_chain_adversarial_pages(spark, oracle, pages):
+    df = spark.createDataFrame(
+        [(f"u{n}", None, None, text, lang) for n, (text, lang) in enumerate(pages)],
+        PAGES_DDL,
+    )
+    expected = expected_sentences(pages)
+    for detail in (True, False):
+        tagged = run_pipeline(df, lang_filter=None, detail=detail)["tagged"].collect()
+        assert {(r.url, r.sent_idx): r.sent for r in tagged} == expected
+        assert_tagged_equals_kernel(tagged, oracle, detail)
+
+
+def test_batch_without_mentions_has_zero_offsets(spark):
+    """A batch in which no sentence has a mention: every mention list is
+    empty (all offsets 0), while tokens and 'O' tags still come through."""
+    df = spark.createDataFrame([("u0", None, None, NO_MENTIONS, None)], PAGES_DDL)
+    for detail in (True, False):
+        rows = run_pipeline(df, lang_filter=None, detail=detail)["tagged"].collect()
+        assert len(rows) == 3
+        for r in rows:
+            assert r.mentions == []
+            assert r.words and set(r.tags) == {"O"} and set(r.span_arr) == {0}

@@ -13,8 +13,8 @@ pluggable:
   rule (shared with the SQL twin): head term = lowercase LAST token of the
   mention surface; integer surfaces take the numeric-dummy shortcut
   (main_NER.py:486-496: 10 x ("two", 0)).
-- ``HFBertDescriptorProvider`` — production path: HuggingFace BERT inside a
-  ``mapInPandas`` iterator UDF, model loaded once per executor
+- ``HFBertDescriptorProvider`` — production path: HuggingFace BERT inside the
+  tagging stage's ``mapInArrow`` iterator, model loaded once per executor
   (singleton-per-process like BatchedNerServer.py:27-29). Import-gated:
   transformers/torch are not in this container.
 """
@@ -145,9 +145,9 @@ class HFBertDescriptorProvider:
     ``provider_factory`` hook) and every call batches through the tokenizer.
 
     Batching note: ``tag_sentences`` drives this per mention; for true GPU
-    efficiency override ``descriptors_batch`` from a custom mapInPandas that
-    groups an Arrow batch's masked sentences into one forward pass (the
-    plumbing shape is identical, only the loop body moves).
+    efficiency override ``descriptors_batch`` from the tagging mapInArrow
+    so it groups an Arrow batch's masked sentences into one forward pass
+    (the plumbing shape is identical, only the loop body moves).
     """
 
     def __init__(

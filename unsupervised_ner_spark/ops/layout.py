@@ -41,7 +41,7 @@ def spread_small_scan(df: DataFrame, target: int | None = None) -> DataFrame:
 
     The driver's parquet tables are written as a SINGLE row group, so a
     scan yields one partition no matter what ``maxPartitionBytes`` says,
-    and every narrow chain (the tagging mapInPandas, shingle/simhash
+    and every narrow chain (the tagging mapInArrow, shingle/simhash
     kernels, token explodes) runs single-threaded until its first
     exchange. When the scan's partition count is below the session's
     default parallelism, round-robin repartition to it; otherwise return

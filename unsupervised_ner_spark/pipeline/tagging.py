@@ -1,10 +1,12 @@
 """Production tagging stage: sentences -> fully-typed sentences, zero shuffle.
 
-One Arrow-batched ``mapInPandas`` applies the whole per-sentence dataflow —
+One Arrow-native ``mapInArrow`` applies the whole per-sentence dataflow —
 span detection, CS/CI mask generation, descriptor fetch, signature join,
 typing aggregation, pooling, BIO emission — exactly the reference's
 ``tag_sentence`` lifecycle (batched_main_NER.py:258-325) with the HTTP hop
-replaced by an in-executor provider.
+replaced by an in-executor provider. The kernel's results are written
+straight into Arrow list/struct arrays from flat per-batch buffers; there
+is no pandas round trip and no per-mention dict.
 
 Scale notes (SURVEY.md §4.3):
 - This is a NARROW transformation: a 1000-executor run over 10^12 pages has
@@ -23,10 +25,11 @@ from __future__ import annotations
 
 from collections.abc import Callable, Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from unsupervised_ner_spark import dims
 from unsupervised_ner_spark.descriptors import FixtureDescriptorProvider
@@ -66,8 +69,8 @@ MENTION = T.StructType(
         T.StructField("ci_dist", T.ArrayType(DIST_ENTRY)),
     ]
 )
-# slim variant for the hot path: Arrow conversion of deeply nested structs
-# dominates the tagging stage cost, and tags/triples only need these fields
+# slim variant for the hot path: tags/triples only need these fields, and
+# every nested detail field is extra per-mention writing and shipping
 MENTION_SLIM = T.StructType(
     [
         T.StructField("begin_tok", T.IntegerType()),
@@ -137,6 +140,21 @@ def _worker_tagger(
     return _WORKER_TAGGER_CACHE[key]
 
 
+def _list_array(offsets: list[int], child: pa.Array) -> pa.ListArray:
+    return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), child)
+
+
+def _struct_array(struct_type: pa.StructType, children: list) -> pa.StructArray:
+    """A struct array from per-field children in field order: flat Python
+    lists (converted at the field's type) or already-built arrays."""
+    fields = list(struct_type)
+    return pa.StructArray.from_arrays(
+        [c if isinstance(c, pa.Array) else pa.array(c, f.type)
+         for c, f in zip(children, fields)],
+        fields=fields,
+    )
+
+
 def tag_sentences(
     sentences: DataFrame,
     model: str = "a100",
@@ -146,14 +164,29 @@ def tag_sentences(
     detail: bool = True,
     typing_version: str = "v2",
 ) -> DataFrame:
-    """sentences(url, sent_idx, sent) -> tagged sentences (TAGGED_SCHEMA).
+    """sentences(url, sent_idx, sent) -> tagged sentences (TAGGED_SCHEMA, or
+    TAGGED_SCHEMA_SLIM when ``detail`` is False).
 
     ``sent`` is assumed already punct-terminated by pages_to_sentences, so
-    the in-UDF tagger runs with punct_terminate=False (idempotence).
+    the in-UDF tagger runs with punct_terminate=False (idempotence) and
+    ``sent`` passes through unchanged, like ``url`` and ``sent_idx``.
     ``typing_version``: "v2" (batched, parity oracle) | "v1" (per-mention
     count-fraction semantics, kernel/typing.py:aggregate_entities_v1).
+
+    Per Arrow batch the kernel's results are appended to flat per-batch
+    lists (one per leaf field) next to int32 offset lists, and every list
+    column is emitted as ``ListArray.from_arrays(offsets, child)``, the
+    child being a ``StructArray`` for struct elements.
     """
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    schema = TAGGED_SCHEMA if detail else TAGGED_SCHEMA_SLIM
+    arrow_schema = to_arrow_schema(schema)
+    mention_t = arrow_schema.field("mentions").type.value_type
+    if detail:
+        pooled_t = mention_t.field("pooled").type.value_type
+        stype_t = pooled_t.field("stypes").type.value_type
+        dist_t = mention_t.field("cs_dist").type.value_type
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         if provider_factory is not None:
             tagger = OracleTagger(
                 provider_factory(),
@@ -166,57 +199,76 @@ def tag_sentences(
             )
         else:
             tagger = _worker_tagger(model, suppress_untagged, common_descs, typing_version)
-        for pdf in batches:
-            out = {k: [] for k in ("url", "sent_idx", "sent", "words", "span_arr", "tags", "mentions")}
-            for url, sent_idx, sent in zip(pdf["url"], pdf["sent_idx"], pdf["sent"]):
+        for batch in batches:
+            # words, span_arr and tags are token-aligned: one offset list
+            words, span_bits, tags, tok_off = [], [], [], [0]
+            begin, end, surface, prediction, m_off = [], [], [], [], [0]
+            conf = []  # slim
+            masked, probe = [], []  # detail
+            p_e, p_conf, p_off = [], [], [0]
+            st_st, st_f, st_off = [], [], [0]
+            cs_e, cs_c, cs_off = [], [], [0]
+            ci_e, ci_c, ci_off = [], [], [0]
+            for sent in batch.column("sent").to_pylist():
                 r = tagger.tag_sentence(sent)
-                out["url"].append(url)
-                out["sent_idx"].append(int(sent_idx))
-                out["sent"].append(r.text)
-                out["words"].append(r.words)
-                out["span_arr"].append(r.span_arr)
-                out["tags"].append(r.tags)
-                if detail:
-                    out["mentions"].append(
-                        [
-                            {
-                                "begin_tok": m.begin_tok,
-                                "end_tok": m.end_tok,
-                                "surface": m.surface,
-                                "masked_sent": m.masked_sentence,
-                                "ci_probe": m.ci_probe,
-                                "prediction": m.prediction,
-                                "pooled": [
-                                    {
-                                        "e": e,
-                                        "confidence": c,
-                                        "stypes": [{"st": s, "factor": f} for s, f in st],
-                                    }
-                                    for e, c, st in m.pooled
-                                ],
-                                "cs_dist": [{"e": e, "conf": c} for e, c in m.cs_dist],
-                                "ci_dist": [{"e": e, "conf": c} for e, c in m.ci_dist],
-                            }
-                            for m in r.mentions
-                        ]
-                    )
-                else:
-                    out["mentions"].append(
-                        [
-                            {
-                                "begin_tok": m.begin_tok,
-                                "end_tok": m.end_tok,
-                                "surface": m.surface,
-                                "prediction": m.prediction,
-                                "conf": m.pooled[0][1] if m.pooled else 1.0,
-                            }
-                            for m in r.mentions
-                        ]
-                    )
-            yield pd.DataFrame(out)
+                words += r.words
+                span_bits += r.span_arr
+                tags += r.tags
+                tok_off.append(len(words))
+                for m in r.mentions:
+                    begin.append(m.begin_tok)
+                    end.append(m.end_tok)
+                    surface.append(m.surface)
+                    prediction.append(m.prediction)
+                    if not detail:
+                        conf.append(m.pooled[0][1] if m.pooled else 1.0)
+                        continue
+                    masked.append(m.masked_sentence)
+                    probe.append(m.ci_probe)
+                    for e, c, st in m.pooled:
+                        p_e.append(e)
+                        p_conf.append(c)
+                        for s, f in st:
+                            st_st.append(s)
+                            st_f.append(f)
+                        st_off.append(len(st_st))
+                    p_off.append(len(p_e))
+                    for e, c in m.cs_dist:
+                        cs_e.append(e)
+                        cs_c.append(c)
+                    cs_off.append(len(cs_e))
+                    for e, c in m.ci_dist:
+                        ci_e.append(e)
+                        ci_c.append(c)
+                    ci_off.append(len(ci_e))
+                m_off.append(len(begin))
+            if detail:
+                stypes = _list_array(st_off, _struct_array(stype_t, [st_st, st_f]))
+                mentions = _struct_array(mention_t, [
+                    begin, end, surface, masked, probe, prediction,
+                    _list_array(p_off, _struct_array(pooled_t, [p_e, p_conf, stypes])),
+                    _list_array(cs_off, _struct_array(dist_t, [cs_e, cs_c])),
+                    _list_array(ci_off, _struct_array(dist_t, [ci_e, ci_c])),
+                ])
+            else:
+                mentions = _struct_array(mention_t, [begin, end, surface, prediction, conf])
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("url"),
+                    batch.column("sent_idx"),
+                    batch.column("sent"),
+                    _list_array(tok_off, pa.array(words, pa.string())),
+                    _list_array(tok_off, pa.array(span_bits, pa.int32())),
+                    _list_array(tok_off, pa.array(tags, pa.string())),
+                    _list_array(m_off, mentions),
+                ],
+                names=schema.fieldNames(),
+            )
 
-    schema = TAGGED_SCHEMA if detail else TAGGED_SCHEMA_SLIM
-    return sentences.select("url", "sent_idx", "sent").mapInPandas(run, schema)
+    # the input columns pass through as output columns, so they must already
+    # carry the output types (some callers number sentences as bigint)
+    inputs = [F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields[:3]]
+    return sentences.select(*inputs).mapInArrow(run, schema)
 
 
 def emit_resolved_span_tags(tagged: DataFrame, resolved: DataFrame) -> DataFrame:
