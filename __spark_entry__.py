@@ -27,7 +27,6 @@ if str(REPO) not in sys.path:
 
 from unsupervised_ner_spark import oracle_sql as O  # noqa: E402
 from unsupervised_ner_spark.ops import dedup, multimodal, simsearch, textstats  # noqa: E402
-from unsupervised_ner_spark.pipeline import mentions as M  # noqa: E402
 from unsupervised_ner_spark.pipeline.runner import run_pipeline  # noqa: E402
 from unsupervised_ner_spark.pipeline.text import pages_to_sentences  # noqa: E402
 
@@ -65,19 +64,6 @@ def _sentences(spark, sf_dir):
     )
 
 
-def _mentions(spark, sf_dir):
-    s = _sentences(spark, sf_dir)
-    m = M.tokens_to_mentions(M.sentences_to_tokens(s))
-    return m.select(
-        "url",
-        F.col("sent_idx").cast("long").alias("sent_idx"),
-        F.col("mention_idx").cast("long").alias("mention_idx"),
-        F.col("begin_tok").cast("long").alias("begin_tok"),
-        F.col("end_tok").cast("long").alias("end_tok"),
-        "surface",
-    )
-
-
 # ---------------------------------------------------------------------------
 # KG chain queries (documents table as the page corpus)
 # ---------------------------------------------------------------------------
@@ -88,7 +74,16 @@ def q_kg_sentences(spark, sf_dir):
 
 
 def q_kg_mentions(spark, sf_dir):
-    return _mentions(spark, sf_dir)
+    """Mention spans from the narrow production tagging pass — the one
+    mention detector."""
+    return _typed_production(spark, sf_dir).select(
+        "url",
+        F.col("sent_idx").cast("long").alias("sent_idx"),
+        F.col("mention_idx").cast("long").alias("mention_idx"),
+        F.col("begin_tok").cast("long").alias("begin_tok"),
+        F.col("end_tok").cast("long").alias("end_tok"),
+        "surface",
+    )
 
 
 def q_kg_mentions_pos(spark, sf_dir):
@@ -110,9 +105,11 @@ def q_kg_mentions_pos(spark, sf_dir):
 
 
 def q_kg_masks(spark, sf_dir):
-    s = _sentences(spark, sf_dir)
-    m = M.tokens_to_mentions(M.sentences_to_tokens(s))
-    out = M.with_masks(m, s)
+    """CS masked sentence + CI probe per production mention, rebuilt from
+    the tagged row's words (no join back to the sentences)."""
+    from unsupervised_ner_spark.pipeline.runner import masked_mentions_from_tagged
+
+    out = masked_mentions_from_tagged(_tagged_production(spark, sf_dir))
     return out.select(
         "url",
         F.col("sent_idx").cast("long").alias("sent_idx"),
@@ -1424,15 +1421,19 @@ def q_kg_ensemble_reconciled(spark, sf_dir):
     )
 
 
+def _tagged_production(spark, sf_dir):
+    """The narrow production tagging pass over the documents table."""
+    return run_pipeline(_docs_as_pages(spark, sf_dir), lang_filter=None)["tagged"]
+
+
 def _typed_production(spark, sf_dir):
     """Typed mentions from the narrow production tagging pass — the one
-    typing implementation; kg_typed_mentions gates it directly against the
-    DuckDB typing oracle, and the ER queries feed off it."""
+    mention and typing implementation; kg_mentions and kg_typed_mentions
+    gate it directly against the DuckDB oracles, and the ER queries feed
+    off it."""
     from unsupervised_ner_spark.pipeline.runner import typed_mentions_from_tagged
 
-    pages = _docs_as_pages(spark, sf_dir)
-    stages = run_pipeline(pages, lang_filter=None)
-    return typed_mentions_from_tagged(stages["tagged"])
+    return typed_mentions_from_tagged(_tagged_production(spark, sf_dir))
 
 
 def q_er_exact_canonical(spark, sf_dir):

@@ -177,6 +177,20 @@ def main() -> None:
         checks.append(("CC labels materialized (lineage cut): ExistingRDD scan",
                        "ExistingRDD" in p7))
 
+    # 7a. the production tagging pass is the one mention detector:
+    # kg_mentions and kg_masks flatten its tagged rows (masks rebuilt from
+    # the row's words) — one tagging kernel, no (url, sent_idx) run-grouping
+    # window, no join back to the sentences; the only exchange left is the
+    # ingest spread's round-robin one.
+    for qname, qfn in (("kg_mentions", entry.q_kg_mentions),
+                       ("kg_masks", entry.q_kg_masks)):
+        pq = plan_of(qfn(spark, SF))
+        sections.append((f"{qname} from the production tagging pass", pq))
+        checks.append((f"{qname}: one tagging kernel (MapInArrow), no Window, "
+                       "no hashpartitioning exchange",
+                       len(kernel_node_ids(pq, "MapInArrow")) == 1
+                       and "Window" not in pq and "hashpartitioning" not in pq))
+
     # 7b. SimHash Hamming pairs: blocking table persisted once (feeds the
     # bucket-size aggregate AND both self-join sides), no forced broadcast
     # — same posture as the minhash LSH plan.

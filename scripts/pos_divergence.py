@@ -1,5 +1,6 @@
-"""Divergence report: POS-lite heuristic mentions vs POS-tag-driven mentions
-(VERDICT r01 "Next round" item 1) on the canned synthetic corpus.
+"""Divergence report: the production tagging pass's POS-lite mentions vs
+POS-tag-driven mentions (VERDICT r01 "Next round" item 1) on the canned
+synthetic corpus.
 
 Writes POS_DIVERGENCE.md with per-category counts and examples, quantifying
 where the round-1 heuristic disagrees with the reference-faithful
@@ -16,14 +17,10 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
-from pyspark.sql import functions as F  # noqa: E402
-
 from unsupervised_ner_spark.pipeline import pos  # noqa: E402
-from unsupervised_ner_spark.pipeline.mentions import (  # noqa: E402
-    sentences_to_tokens,
-    tokens_to_mentions,
-)
+from unsupervised_ner_spark.pipeline.runner import typed_mentions_from_tagged  # noqa: E402
 from unsupervised_ner_spark.pipeline.synth import synth_pages  # noqa: E402
+from unsupervised_ner_spark.pipeline.tagging import tag_sentences  # noqa: E402
 from unsupervised_ner_spark.pipeline.text import pages_to_sentences  # noqa: E402
 from unsupervised_ner_spark.session import get_spark  # noqa: E402
 
@@ -33,7 +30,7 @@ def main() -> None:
     spark = get_spark("pos_divergence", cores=8, shuffle_partitions=8)
     sentences = pages_to_sentences(synth_pages(spark, n_pages)).cache()
 
-    lite = tokens_to_mentions(sentences_to_tokens(sentences)).select(
+    lite = typed_mentions_from_tagged(tag_sentences(sentences, detail=False)).select(
         "url", "sent_idx", "begin_tok", "end_tok", "surface"
     )
     tagged = pos.mentions_from_tagged_tokens(pos.tagged_tokens(sentences)).select(
@@ -62,7 +59,7 @@ confined to unmarked text).
 
 | metric | count |
 |---|---|
-| POS-lite mentions (kernel/spans.py heuristic) | {n_lite} |
+| POS-lite mentions (production tagging pass, kernel/spans.py heuristic) | {n_lite} |
 | POS-tagged mentions (pipeline/pos.py, noun_tags runs) | {n_pos} |
 | identical spans (same url/sent/begin/end/surface) | {both} |
 | POS-lite only | {n_lite_only} |

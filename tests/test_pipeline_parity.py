@@ -1,18 +1,17 @@
 """Distributed-vs-oracle parity: the Spark pipeline must reproduce the
-single-process oracle token-for-token (SURVEY.md §5.2), and the declarative
-SQL mention variant must agree with the UDF path."""
+single-process oracle token-for-token (SURVEY.md §5.2), and the kg_masks
+column algebra must rebuild the kernel's masks and probes."""
 
 import pytest
 
 from unsupervised_ner_spark import dims
 from unsupervised_ner_spark.descriptors import FixtureDescriptorProvider
 from unsupervised_ner_spark.kernel.oracle import OracleTagger, add_term_punct
-from unsupervised_ner_spark.pipeline.mentions import (
-    sentences_to_tokens,
-    tokens_to_mentions,
-    with_masks,
+from unsupervised_ner_spark.pipeline.runner import (
+    masked_mentions_from_tagged,
+    run_pipeline,
 )
-from unsupervised_ner_spark.pipeline.runner import run_pipeline
+from unsupervised_ner_spark.pipeline.tagging import tag_sentences
 from unsupervised_ner_spark.pipeline.synth import synth_pages
 from unsupervised_ner_spark.pipeline.text import extract_text, pages_to_sentences
 
@@ -79,24 +78,19 @@ def test_sentences_match_oracle_splitting(spark, pages, stages):
 
 def kernel_mention(m, detail: bool = True) -> dict:
     """The kernel's MentionResult as the tagged row's mention struct
-    (MENTION when ``detail``, else MENTION_SLIM)."""
+    (MENTION when ``detail``, else MENTION_SLIM): ``conf`` is the top
+    pooled confidence (1.0 when nothing is pooled)."""
     out = {
         "begin_tok": m.begin_tok,
         "end_tok": m.end_tok,
         "surface": m.surface,
         "prediction": m.prediction,
+        "conf": m.pooled[0][1] if m.pooled else 1.0,
     }
     if not detail:
-        return {**out, "conf": m.pooled[0][1] if m.pooled else 1.0}
+        return out
     return {
         **out,
-        "masked_sent": m.masked_sentence,
-        "ci_probe": m.ci_probe,
-        "pooled": [
-            {"e": e, "confidence": c,
-             "stypes": [{"st": st, "factor": f} for st, f in stypes]}
-            for e, c, stypes in m.pooled
-        ],
         "cs_dist": [{"e": e, "conf": c} for e, c in m.cs_dist],
         "ci_dist": [{"e": e, "conf": c} for e, c in m.ci_dist],
     }
@@ -104,12 +98,11 @@ def kernel_mention(m, detail: bool = True) -> dict:
 
 def assert_tagged_equals_kernel(rows, oracle, detail: bool) -> None:
     """Every tagged row equals the single-process kernel's result for its
-    sentence: tokens, span bits, tags and every mention field."""
+    sentence: tokens, tags and every mention field."""
     for row in rows:
         o = oracle.tag_sentence(row.sent)
         assert row.sent == o.text
         assert row.words == o.words, row.sent
-        assert row.span_arr == o.span_arr, row.sent
         assert row.tags == o.tags, row.sent
         got = [m.asDict(recursive=True) for m in row.mentions]
         assert got == [kernel_mention(m, detail) for m in o.mentions], row.sent
@@ -119,45 +112,52 @@ def test_tagged_matches_oracle(stages, oracle):
     """Token-level BIO parity + every MENTION field against the kernel."""
     tagged = stages["tagged"].collect()
     assert len(tagged) > 0
-    assert any(m.pooled and m.pooled[0].stypes for r in tagged for m in r.mentions)
+    assert any(0.0 < m.conf < 1.0 for r in tagged for m in r.mentions)
     assert any(m.cs_dist and m.ci_dist for r in tagged for m in r.mentions)
     assert_tagged_equals_kernel(tagged, oracle, detail=True)
 
 
 def test_slim_tagged_matches_oracle(pages, oracle):
-    """detail=False: every MENTION_SLIM field, ``conf`` = top pooled
-    confidence (1.0 when nothing is pooled)."""
+    """detail=False: every MENTION_SLIM field."""
     tagged = run_pipeline(pages, lang_filter=None, detail=False)["tagged"].collect()
     assert len(tagged) > 0
     assert sum(len(r.mentions) for r in tagged) > 0
     assert_tagged_equals_kernel(tagged, oracle, detail=False)
 
 
-def test_sql_mentions_agree_with_udf_path(spark, stages):
-    """The declarative gaps-and-islands variant (pipeline/mentions.py) must
-    produce exactly the UDF path's spans, masks, and probes."""
-    sentences = stages["sentences"]
-    toks = sentences_to_tokens(sentences)
-    ments = with_masks(tokens_to_mentions(toks), sentences)
-    sql_rows = {
-        (r.url, r.sent_idx, r.begin_tok): (
-            r.end_tok,
-            r.surface,
-            r.masked_sent,
-            r.ci_probe,
+# marker sentences (ensemble/utils/common.py:66-79): marked tokens are the
+# mentions, a bare trailing marker is a blank-probe mention
+MARKER_SENTS = [
+    "He felt New:__entity__ York:__entity__ has a chance .",
+    "Patients with mesothelioma:__entity__ report asbestos exposure .",
+    "Aspirin:__entity__ and imatinib:__entity__ treat it :__entity__",
+]
+
+
+def test_sql_mentions_agree_with_udf_path(spark, stages, oracle):
+    """The kg_masks column algebra (runner.masked_mentions_from_tagged)
+    rebuilds exactly the kernel's per-mention CS mask and CI probe from the
+    tagged row's words, on the synthetic corpus and on marker sentences."""
+    markers = spark.createDataFrame(
+        [("marker", i, s) for i, s in enumerate(MARKER_SENTS)],
+        "url string, sent_idx int, sent string",
+    )
+    sentences = stages["sentences"].select("url", "sent_idx", "sent").unionByName(markers)
+    tagged = tag_sentences(sentences, detail=False)
+    got = {
+        (r.url, r.sent_idx, r.mention_idx): (
+            r.begin_tok, r.end_tok, r.surface, r.masked_sent, r.ci_probe,
         )
-        for r in ments.collect()
+        for r in masked_mentions_from_tagged(tagged).collect()
     }
-    udf_rows = {}
-    for row in stages["tagged"].collect():
-        for m in row.mentions:
-            udf_rows[(row.url, row.sent_idx, m.begin_tok)] = (
-                m.end_tok,
-                m.surface,
-                m.masked_sent,
-                m.ci_probe,
+    expected = {}
+    for r in sentences.collect():
+        for i, m in enumerate(oracle.tag_sentence(r.sent).mentions):
+            expected[(r.url, r.sent_idx, i)] = (
+                m.begin_tok, m.end_tok, m.surface, m.masked_sentence, m.ci_probe,
             )
-    assert sql_rows == udf_rows
+    assert sum(k[0] == "marker" for k in expected) == 5
+    assert got == expected
 
 
 def test_triples_shape(stages):

@@ -2,9 +2,11 @@
 tagging): degenerate and extreme inputs must not throw under either tagged
 schema, and every tagged row must equal the single-process kernel's."""
 
+import pyarrow as pa
 import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 from test_pipeline_parity import assert_tagged_equals_kernel
 
 from unsupervised_ner_spark import dims
@@ -14,14 +16,18 @@ from unsupervised_ner_spark.pipeline.runner import run_pipeline
 
 PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
 
-# ~10k tokens, 3 mentions. Every detail-mode mention carries its masked
-# sentence, so a row grows with mentions x sentence length: a mention-dense
-# 10k-token sentence (3,401 mentions) is a ~280 MB row, more than a test
-# collect can hold on the suite's driver heap.
+# ~10k tokens, 3 mentions
 LONG_SENT = " ".join(
     ["Mesothelioma"] + ["the", "of", "and", "to"] * 1250
     + ["asbestos"] + ["in", "on", "at", "by"] * 1250 + ["Imatinib"]
 )
+# 10,201 tokens, 3,401 mentions (one every third token). A record that
+# carried each mention's masked sentence grew with mentions x sentence
+# length: ~280 MB for this one row.
+DENSE_SENT = " ".join(
+    ["Mesothelioma", "asbestos", "Imatinib", "aspirin"][i % 4] + " the of"
+    for i in range(3400)
+) + " Mesothelioma"
 NO_MENTIONS = "the of and to\nit is in on\nwe are at by"  # stopwords only
 
 LINES = [
@@ -78,6 +84,7 @@ def expected_sentences(pages) -> dict:
 @example(pages=[("x", "en")])
 @example(pages=[("Mesothelioma is caused by asbestos exposure", None)])
 @example(pages=[(LONG_SENT, "en")])
+@example(pages=[(DENSE_SENT, "en")])
 @example(pages=[("Мезотелиома вызвана асбестом\n石棉导致间皮瘤。", None)])
 @example(pages=[(NO_MENTIONS, "en"), ("the of and to", None)])
 def test_narrow_chain_adversarial_pages(spark, oracle, pages):
@@ -101,4 +108,24 @@ def test_batch_without_mentions_has_zero_offsets(spark):
         assert len(rows) == 3
         for r in rows:
             assert r.mentions == []
-            assert r.words and set(r.tags) == {"O"} and set(r.span_arr) == {0}
+            assert r.words and set(r.tags) == {"O"}
+
+
+def arrow_nbytes(df) -> int:
+    """Arrow size of ``df``'s rows, measured in a Python worker so that
+    only one number per batch reaches the driver."""
+    sizes = df.mapInArrow(
+        lambda batches: (pa.RecordBatch.from_pydict({"n": [b.nbytes]}) for b in batches),
+        "n long",
+    )
+    return sum(r.n for r in sizes.collect())
+
+
+def test_dense_sentence_row_stays_small(spark):
+    """The tagged row of a mention-dense sentence grows with its tokens and
+    mentions, not with mentions x sentence length, in either schema."""
+    df = spark.createDataFrame([("u0", None, None, DENSE_SENT, "en")], PAGES_DDL)
+    for detail in (True, False):
+        tagged = run_pipeline(df, lang_filter=None, detail=detail)["tagged"]
+        assert tagged.select(F.size("mentions").alias("n")).first().n == 3401
+        assert arrow_nbytes(tagged) < 4 * 2**20

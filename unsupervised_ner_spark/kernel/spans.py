@@ -12,10 +12,9 @@ Re-expresses (from scratch) the observable span semantics of the reference:
 The reference outsources POS tagging to an external jPTDP HTTP service
 (config.json:1). This engine replaces it with a deterministic heuristic
 "POS-lite" tagger whose *noun-ness* rule is simple enough to be expressed
-identically in Spark SQL and ANSI SQL (for oracle checks): see
-``POSLITE_RULE`` below. Only noun-vs-not matters downstream — maximal runs of
-noun-ish tokens become mentions, exactly like runs of NOUN_TAGS in the
-reference.
+identically in ANSI SQL (for oracle checks): see ``is_nounish`` below.
+Only noun-vs-not matters downstream — maximal runs of noun-ish tokens
+become mentions, exactly like runs of NOUN_TAGS in the reference.
 """
 
 from __future__ import annotations
@@ -30,8 +29,8 @@ from unsupervised_ner_spark.kernel.constants import (
 )
 
 # ---------------------------------------------------------------------------
-# POS-lite: deterministic noun-ness heuristic (SQL-expressible; see
-# pipeline/mentions.py for the Spark SQL twin and __spark_entry__ oracles).
+# POS-lite: deterministic noun-ness heuristic (SQL-expressible; the DuckDB
+# oracles in oracle_sql.py replay it to gate kg_mentions and the typed chain).
 #
 #   nounish(w) :=      w is not an English function word (FUNCTION_WORDS)
 #                 AND  w contains at least one alphanumeric char

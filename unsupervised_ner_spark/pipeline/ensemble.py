@@ -5,9 +5,9 @@ Re-expresses ensemble/aggregate_server_json.py end-to-end:
 - the FULL resolution maze — layer-1 server pick + layer-2
   gen_resolved_entity emission chain — lives in
   ``pipeline/ensemble_rules.py`` (one Column-algebra implementation;
-  rule-by-rule citations there), driven here by the per-mention packed
-  CS/CI distributions the tagging stage now carries
-  (MENTION.cs_dist/ci_dist).
+  rule-by-rule citations there), driven here by each detail-mode
+  mention's top pooled confidence and packed CS/CI distributions
+  (MENTION.conf/cs_dist/ci_dist).
 - span re-sync ("Picking min span length", :84-88 + get_span_info
   :500-517): the two branches share mention detection (same tokenizer), so
   spans align by construction — but the join deliberately keys on
@@ -35,14 +35,13 @@ def _mention_rows(tagged: DataFrame, suffix: str) -> DataFrame:
         "url", "sent_idx",
         F.posexplode("mentions").alias("mention_idx", "m"),
     )
-    pooled = F.col("m.pooled")
     return m.select(
         "url", "sent_idx", "mention_idx",
         F.col("m.surface").alias(f"surface_{suffix}"),
         F.col("m.begin_tok").alias("begin_tok"),
         F.col("m.end_tok").alias(f"end_{suffix}"),
         F.col("m.prediction").alias(f"pred_{suffix}"),
-        F.element_at(pooled, 1)["confidence"].alias(f"conf_{suffix}"),
+        F.col("m.conf").alias(f"conf_{suffix}"),
         F.col("m.cs_dist").alias(f"cs_{suffix}"),
         F.col("m.ci_dist").alias(f"ci_{suffix}"),
     )

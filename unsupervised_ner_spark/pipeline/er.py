@@ -271,7 +271,6 @@ def connected_components(
 
 def connected_components_star(
     nodes: DataFrame, edges: DataFrame, max_iter: int = 50,
-    loop_partitions: int | None = None,
 ) -> tuple[DataFrame, int]:
     """Alternating large-star/small-star connected components (Kiveris et
     al., "Connected Components in MapReduce and Beyond", SOCC'14 — a public
@@ -300,8 +299,7 @@ def connected_components_star(
     stage); the canonical distinct supplies the round's second exchange.
     The per-round explicit repartition is gone: AQE sizes every round's
     shuffle from runtime stats (scale-adaptive, not a constant tuned to
-    either local mode or a cluster); an explicitly passed
-    ``loop_partitions`` is still honored. Per round: 4 exchanges + 1
+    either local mode or a cluster). Per round: 4 exchanges + 1
     checkpoint job + 1 O(1) fingerprint collect (was ~7 exchanges + 3
     jobs). Measured labels are bit-identical (same star emissions)."""
 
@@ -325,17 +323,12 @@ def connected_components_star(
         ).collect()
         return (row.n, row.h)
 
-    def reshape(e: DataFrame) -> DataFrame:
-        if loop_partitions is not None:
-            e = e.repartition(loop_partitions, "a")
-        return e.localCheckpoint()
-
     # canon() symmetrizes via least/greatest, so canon(edges) equals the
     # former canon(union(edges, reversed(edges))) without doubling the
     # distinct's input
-    E = reshape(
-        canon(edges.select(F.col("node_a").alias("a"), F.col("node_b").alias("b")))
-    )
+    E = canon(
+        edges.select(F.col("node_a").alias("a"), F.col("node_b").alias("b"))
+    ).localCheckpoint()
     fp = fingerprint(E)
     w_u = Window.partitionBy("u")
     iterations = 0
@@ -365,7 +358,7 @@ def connected_components_star(
         small = g2.select(F.col("v").alias("a"), F.col("mv").alias("b")).union(
             g2.select(F.col("u").alias("a"), F.col("mv").alias("b"))
         )
-        E = reshape(canon(small))
+        E = canon(small).localCheckpoint()
         new_fp = fingerprint(E)
         if new_fp == fp:
             break
@@ -406,14 +399,10 @@ def salted_occurrence_link(
 
 
 def resolve_entities(
-    occurrences: DataFrame, max_iter: int = 20, cc_algorithm: str = "star"
+    occurrences: DataFrame, max_iter: int = 20
 ) -> tuple[DataFrame, DataFrame]:
-    """Full ER: exact grouping -> fuzzy LSH edges -> connected components.
-
-    ``cc_algorithm``: "star" (default — large/small-star, O(log n) rounds,
-    diameter-proof at 10^12 docs) or "minlabel" (O(diameter) neighbor-min
-    propagation; kept for cross-checking — both label components by their
-    min node_id, so outputs are identical).
+    """Full ER: exact grouping -> fuzzy LSH edges -> large/small-star
+    connected components (O(log n) rounds, diameter-proof at 10^12 docs).
 
     Returns (entities, membership):
     - entities(entity_id, etype, canonical_surface, n_mentions)
@@ -425,8 +414,7 @@ def resolve_entities(
     # mention pipeline runs once
     nodes = scoped_persist(exact_canonical(occurrences))
     edges = fuzzy_edges(nodes)
-    cc = connected_components_star if cc_algorithm == "star" else connected_components
-    labels, _iters = cc(nodes.select("node_id"), edges, max_iter)
+    labels, _iters = connected_components_star(nodes.select("node_id"), edges, max_iter)
     merged = nodes.join(labels, "node_id")
     entities = (
         merged.groupBy("component", "etype")

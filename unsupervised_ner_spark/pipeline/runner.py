@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from unsupervised_ner_spark.kernel.constants import CI_TEMPLATE, MASK_TAG
 from unsupervised_ner_spark.pipeline.tagging import (
     tag_sentences,
     tagged_to_token_tags,
@@ -23,14 +24,13 @@ def run_pipeline(
     model: str = "a100",
     lang_filter: str | None = "en",
     detail: bool = False,
-    **tag_kwargs,
 ) -> dict[str, DataFrame]:
     """Returns the lazily-planned stage DataFrames keyed by stage name."""
     if lang_filter:
         # partition-prunable predicate at the scan (SURVEY.md §4.2)
         pages = pages.filter(F.col("lang") == lang_filter)
     sentences = pages_to_sentences(pages)
-    tagged = tag_sentences(sentences, model=model, detail=detail, **tag_kwargs)
+    tagged = tag_sentences(sentences, model=model, detail=detail)
     return {
         "pages": pages,
         "sentences": sentences,
@@ -62,6 +62,50 @@ def typed_mentions_from_tagged(tagged: DataFrame) -> DataFrame:
         F.col("m.surface").alias("surface"),
         F.split(F.col("m.prediction"), r"\[")[0].alias("pred_group"),
         F.col("m.prediction").alias("prediction"),
+    )
+
+
+def masked_mentions_from_tagged(tagged: DataFrame) -> DataFrame:
+    """The production mentions with their CS masked sentence and CI probe
+    (url, sent_idx, mention_idx, begin_tok, end_tok, surface, masked_sent,
+    ci_probe), rebuilt as column algebra from the tagged row's ``words``
+    and the mention's span — the row shape of the DuckDB ``kg_masks``
+    oracle. Narrow: one posexplode, no exchange.
+
+    The mask is ``words`` with the span replaced by one ``__entity__``
+    (kernel/spans.py:masked_sentence); the probe capitalizes each span word
+    whose first TWO letters are lowercase (batched_main_NER.py:327-335)."""
+    m = tagged.select(
+        "url", "sent_idx", "words",
+        F.posexplode("mentions").alias("mention_idx", "m"),
+    )
+    words, n = F.col("words"), F.size("words")
+    b, e = F.col("m.begin_tok"), F.col("m.end_tok")
+    masked = F.array_join(
+        F.concat(
+            F.slice(words, 1, b),
+            F.array(F.lit(MASK_TAG)),
+            F.slice(words, e + 2, n - e - 1),
+        ),
+        " ",
+    )
+    cap = F.transform(
+        F.split(F.col("m.surface"), " "),
+        lambda t: F.when(
+            t.rlike("^[a-z][a-z]"),
+            F.concat(F.upper(t.substr(F.lit(1), F.lit(1))), t.substr(F.lit(2), F.length(t))),
+        ).otherwise(t),
+    )
+    probe = F.format_string(CI_TEMPLATE, F.array_join(cap, " "))
+    return m.select(
+        "url",
+        "sent_idx",
+        "mention_idx",
+        b.alias("begin_tok"),
+        e.alias("end_tok"),
+        F.col("m.surface").alias("surface"),
+        masked.alias("masked_sent"),
+        probe.alias("ci_probe"),
     )
 
 

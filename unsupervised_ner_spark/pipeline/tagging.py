@@ -8,6 +8,14 @@ replaced by an in-executor provider. The kernel's results are written
 straight into Arrow list/struct arrays from flat per-batch buffers; there
 is no pandas round trip and no per-mention dict.
 
+This pass is the engine's only mention detector, and its record carries
+only what a consumer reads: ``words`` and ``tags`` per sentence, and per
+mention its span, surface, prediction and top pooled ``conf``; detail
+mode adds the packed CS/CI distributions the two-model ensemble resolves
+on. The CS mask and CI probe are rebuilt from ``words`` where a query
+asks for them (runner.masked_mentions_from_tagged), so no row grows with
+mentions x sentence length.
+
 Scale notes (SURVEY.md §4.3):
 - This is a NARROW transformation: a 1000-executor run over 10^12 pages has
   no exchange until the cross-document ER stage.
@@ -35,17 +43,14 @@ from unsupervised_ner_spark import dims
 from unsupervised_ner_spark.descriptors import FixtureDescriptorProvider
 from unsupervised_ner_spark.kernel.oracle import OracleTagger
 
-STYPE = T.StructType(
+# slim mention: what tags, triples and the typed-mention table read
+MENTION_SLIM = T.StructType(
     [
-        T.StructField("st", T.StringType()),
-        T.StructField("factor", T.DoubleType()),
-    ]
-)
-POOLED = T.StructType(
-    [
-        T.StructField("e", T.StringType()),
-        T.StructField("confidence", T.DoubleType()),
-        T.StructField("stypes", T.ArrayType(STYPE)),
+        T.StructField("begin_tok", T.IntegerType()),
+        T.StructField("end_tok", T.IntegerType()),
+        T.StructField("surface", T.StringType()),
+        T.StructField("prediction", T.StringType()),
+        T.StructField("conf", T.DoubleType()),
     ]
 )
 # packed per-side distribution entry (pack_confidences,
@@ -56,30 +61,17 @@ DIST_ENTRY = T.StructType(
         T.StructField("conf", T.DoubleType()),
     ]
 )
+# detail mention: the slim fields plus the per-side distributions the
+# two-model ensemble resolves conflicts on
 MENTION = T.StructType(
-    [
-        T.StructField("begin_tok", T.IntegerType()),
-        T.StructField("end_tok", T.IntegerType()),
-        T.StructField("surface", T.StringType()),
-        T.StructField("masked_sent", T.StringType()),
-        T.StructField("ci_probe", T.StringType()),
-        T.StructField("prediction", T.StringType()),
-        T.StructField("pooled", T.ArrayType(POOLED)),
+    MENTION_SLIM.fields
+    + [
         T.StructField("cs_dist", T.ArrayType(DIST_ENTRY)),
         T.StructField("ci_dist", T.ArrayType(DIST_ENTRY)),
     ]
 )
-# slim variant for the hot path: tags/triples only need these fields, and
-# every nested detail field is extra per-mention writing and shipping
-MENTION_SLIM = T.StructType(
-    [
-        T.StructField("begin_tok", T.IntegerType()),
-        T.StructField("end_tok", T.IntegerType()),
-        T.StructField("surface", T.StringType()),
-        T.StructField("prediction", T.StringType()),
-        T.StructField("conf", T.DoubleType()),
-    ]
-)
+
+
 def _tagged_schema(mention_type):
     return T.StructType(
         [
@@ -87,7 +79,6 @@ def _tagged_schema(mention_type):
             T.StructField("sent_idx", T.IntegerType()),
             T.StructField("sent", T.StringType()),
             T.StructField("words", T.ArrayType(T.StringType())),
-            T.StructField("span_arr", T.ArrayType(T.IntegerType())),
             T.StructField("tags", T.ArrayType(T.StringType())),
             T.StructField("mentions", T.ArrayType(mention_type)),
         ]
@@ -109,12 +100,8 @@ TAGGED_SCHEMA_SLIM = _tagged_schema(MENTION_SLIM)
 _WORKER_TAGGER_CACHE: dict = {}
 
 
-def _worker_tagger(
-    model: str, suppress_untagged: bool, common_descs: frozenset[str],
-    typing_version: str = "v2",
-) -> OracleTagger:
-    key = (model, suppress_untagged, common_descs, typing_version)
-    if key not in _WORKER_TAGGER_CACHE:
+def _worker_tagger(model: str) -> OracleTagger:
+    if model not in _WORKER_TAGGER_CACHE:
         import pickle
 
         from unsupervised_ner_spark.descriptors import FIXTURES_DIR
@@ -128,16 +115,10 @@ def _worker_tagger(
         else:
             provider = FixtureDescriptorProvider.load(model)
             emap, sigs = dims.load_entity_map(), dims.load_signatures(model)
-        _WORKER_TAGGER_CACHE[key] = OracleTagger(
-            provider,
-            emap,
-            sigs,
-            common_descs=common_descs,
-            suppress_untagged=suppress_untagged,
-            punct_terminate=False,
-            typing_version=typing_version,
+        _WORKER_TAGGER_CACHE[model] = OracleTagger(
+            provider, emap, sigs, punct_terminate=False
         )
-    return _WORKER_TAGGER_CACHE[key]
+    return _WORKER_TAGGER_CACHE[model]
 
 
 def _list_array(offsets: list[int], child: pa.Array) -> pa.ListArray:
@@ -158,11 +139,8 @@ def _struct_array(struct_type: pa.StructType, children: list) -> pa.StructArray:
 def tag_sentences(
     sentences: DataFrame,
     model: str = "a100",
-    suppress_untagged: bool = True,
-    common_descs: frozenset[str] = frozenset(),
     provider_factory: Callable[[], object] | None = None,
     detail: bool = True,
-    typing_version: str = "v2",
 ) -> DataFrame:
     """sentences(url, sent_idx, sent) -> tagged sentences (TAGGED_SCHEMA, or
     TAGGED_SCHEMA_SLIM when ``detail`` is False).
@@ -170,8 +148,7 @@ def tag_sentences(
     ``sent`` is assumed already punct-terminated by pages_to_sentences, so
     the in-UDF tagger runs with punct_terminate=False (idempotence) and
     ``sent`` passes through unchanged, like ``url`` and ``sent_idx``.
-    ``typing_version``: "v2" (batched, parity oracle) | "v1" (per-mention
-    count-fraction semantics, kernel/typing.py:aggregate_entities_v1).
+    ``conf`` is the top pooled confidence (1.0 when nothing is pooled).
 
     Per Arrow batch the kernel's results are appended to flat per-batch
     lists (one per leaf field) next to int32 offset lists, and every list
@@ -179,11 +156,8 @@ def tag_sentences(
     child being a ``StructArray`` for struct elements.
     """
     schema = TAGGED_SCHEMA if detail else TAGGED_SCHEMA_SLIM
-    arrow_schema = to_arrow_schema(schema)
-    mention_t = arrow_schema.field("mentions").type.value_type
+    mention_t = to_arrow_schema(schema).field("mentions").type.value_type
     if detail:
-        pooled_t = mention_t.field("pooled").type.value_type
-        stype_t = pooled_t.field("stypes").type.value_type
         dist_t = mention_t.field("cs_dist").type.value_type
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -192,27 +166,19 @@ def tag_sentences(
                 provider_factory(),
                 dims.load_entity_map(),
                 dims.load_signatures(model),
-                common_descs=common_descs,
-                suppress_untagged=suppress_untagged,
                 punct_terminate=False,
-                typing_version=typing_version,
             )
         else:
-            tagger = _worker_tagger(model, suppress_untagged, common_descs, typing_version)
+            tagger = _worker_tagger(model)
         for batch in batches:
-            # words, span_arr and tags are token-aligned: one offset list
-            words, span_bits, tags, tok_off = [], [], [], [0]
-            begin, end, surface, prediction, m_off = [], [], [], [], [0]
-            conf = []  # slim
-            masked, probe = [], []  # detail
-            p_e, p_conf, p_off = [], [], [0]
-            st_st, st_f, st_off = [], [], [0]
-            cs_e, cs_c, cs_off = [], [], [0]
-            ci_e, ci_c, ci_off = [], [], [0]
+            # words and tags are token-aligned: one offset list
+            words, tags, tok_off = [], [], [0]
+            begin, end, surface, prediction, conf, m_off = [], [], [], [], [], [0]
+            cs_e, cs_c, cs_off = [], [], [0]  # detail
+            ci_e, ci_c, ci_off = [], [], [0]  # detail
             for sent in batch.column("sent").to_pylist():
                 r = tagger.tag_sentence(sent)
                 words += r.words
-                span_bits += r.span_arr
                 tags += r.tags
                 tok_off.append(len(words))
                 for m in r.mentions:
@@ -220,19 +186,9 @@ def tag_sentences(
                     end.append(m.end_tok)
                     surface.append(m.surface)
                     prediction.append(m.prediction)
+                    conf.append(m.pooled[0][1] if m.pooled else 1.0)
                     if not detail:
-                        conf.append(m.pooled[0][1] if m.pooled else 1.0)
                         continue
-                    masked.append(m.masked_sentence)
-                    probe.append(m.ci_probe)
-                    for e, c, st in m.pooled:
-                        p_e.append(e)
-                        p_conf.append(c)
-                        for s, f in st:
-                            st_st.append(s)
-                            st_f.append(f)
-                        st_off.append(len(st_st))
-                    p_off.append(len(p_e))
                     for e, c in m.cs_dist:
                         cs_e.append(e)
                         cs_c.append(c)
@@ -242,25 +198,20 @@ def tag_sentences(
                         ci_c.append(c)
                     ci_off.append(len(ci_e))
                 m_off.append(len(begin))
+            fields = [begin, end, surface, prediction, conf]
             if detail:
-                stypes = _list_array(st_off, _struct_array(stype_t, [st_st, st_f]))
-                mentions = _struct_array(mention_t, [
-                    begin, end, surface, masked, probe, prediction,
-                    _list_array(p_off, _struct_array(pooled_t, [p_e, p_conf, stypes])),
+                fields += [
                     _list_array(cs_off, _struct_array(dist_t, [cs_e, cs_c])),
                     _list_array(ci_off, _struct_array(dist_t, [ci_e, ci_c])),
-                ])
-            else:
-                mentions = _struct_array(mention_t, [begin, end, surface, prediction, conf])
+                ]
             yield pa.RecordBatch.from_arrays(
                 [
                     batch.column("url"),
                     batch.column("sent_idx"),
                     batch.column("sent"),
                     _list_array(tok_off, pa.array(words, pa.string())),
-                    _list_array(tok_off, pa.array(span_bits, pa.int32())),
                     _list_array(tok_off, pa.array(tags, pa.string())),
-                    _list_array(m_off, mentions),
+                    _list_array(m_off, _struct_array(mention_t, fields)),
                 ],
                 names=schema.fieldNames(),
             )

@@ -30,17 +30,12 @@ PRED_NORM_MAX_TOKENS = 4
 
 
 def tagged_to_triples(tagged: DataFrame) -> DataFrame:
-    """tagged (pipeline/tagging.TAGGED_SCHEMA) -> triples(url, sent_idx,
-    subj, subj_type, pred, pred_norm, obj, obj_type, conf)."""
-    slim = "conf" in [
-        f.name for f in tagged.schema["mentions"].dataType.elementType.fields
-    ]
+    """tagged (pipeline/tagging.TAGGED_SCHEMA or TAGGED_SCHEMA_SLIM) ->
+    triples(url, sent_idx, subj, subj_type, pred, pred_norm, obj, obj_type,
+    conf)."""
     ms = F.filter(F.col("mentions"), lambda m: m["prediction"] != F.lit("OTHER"))
     n = F.size(ms)
     words = F.col("words")
-
-    def conf_of(m):
-        return m["conf"] if slim else F.element_at(m["pooled"], 1)["confidence"]
 
     def pair_at(i):
         m1 = F.element_at(ms, i + 1)
@@ -70,8 +65,8 @@ def tagged_to_triples(tagged: DataFrame) -> DataFrame:
             F.when(norm == "", F.lit("related_to")).otherwise(norm).alias("pred_norm"),
             m2["surface"].alias("obj"),
             F.split(m2["prediction"], r"\[")[0].alias("obj_type"),
-            conf_of(m1).alias("subj_conf"),
-            conf_of(m2).alias("obj_conf"),
+            m1["conf"].alias("subj_conf"),
+            m2["conf"].alias("obj_conf"),
         )
 
     pairs = F.when(
