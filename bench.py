@@ -1,12 +1,15 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
+"""Benchmark harness: every gated query (``__spark_entry__.queries()``)
+at $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS], plus the full KG
+pipeline (production path) over a synthetic page corpus, measured as
+docs/sec. Prints ONE JSON line:
 {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Headline set = the heavy operators: full KG pipeline (production path) over
-a synthetic page corpus (the engine's real workload, measured as docs/sec),
-the relational KG chain, dedup family, ANN, and the relational aggregates.
-Each query is fully materialized via a count-style action (no driver
-collect of payload rows).
+Each query is fully materialized via a noop sink (no driver collect of
+payload rows). It is also the per-query timer:
+
+    BENCH_ONLY=q1,q2 BENCH_REPS=N python bench.py
+
+times only the listed queries, N reps each.
 """
 
 from __future__ import annotations
@@ -26,349 +29,6 @@ from unsupervised_ner_spark.caching import cache_scope  # noqa: E402
 from unsupervised_ner_spark.pipeline.runner import run_pipeline  # noqa: E402
 from unsupervised_ner_spark.pipeline.synth import synth_pages  # noqa: E402
 from unsupervised_ner_spark.session import get_spark  # noqa: E402
-
-# The FULL gated surface (every queries() key) — VERDICT r04 item 4: the
-# perf record covers all 39 hash-gated queries, not a headline subset.
-BENCH_QUERIES = [
-    "kg_sentences",
-    "kg_mentions",
-    "kg_mentions_pos",
-    "kg_masks",
-    "kg_typed_mentions",
-    "kg_cooccurrence",
-    "kg_cooccurrence_npmi",
-    "kg_entity_degree",
-    "kg_pagerank",
-    "kg_hits",
-    "kg_landmark_centrality",
-    "kg_relation_candidates",
-    "kg_modularity",
-    "kg_kge_eval",
-    "er_pair_features",
-    "kg_path_counts",
-    "txt_sitemaps",
-    "kg_motif_census",
-    "kg_ego_export",
-    "kg_local_bridges",
-    "txt_budget_select",
-    "txt_gopher_flags",
-    "kg_sameas",
-    "ann_kmeans_update",
-    "kg_pred_signatures",
-    "kg_kge_distmult",
-    "kg_kge_complex",
-    "kg_anf",
-    "kg_mis",
-    "kg_matching",
-    "kg_bipartite",
-    "kg_coloring",
-    "kg_topo_layers",
-    "txt_c4_filters",
-    "kg_role_facts",
-    "kg_measurements",
-    "txt_good_turing",
-    "txt_vocab_drift",
-    "rel_bloom_semijoin",
-    "kg_katz",
-    "kg_acronyms",
-    "kg_densest",
-    "kg_coreness",
-    "txt_max_coverage",
-    "kg_betweenness",
-    "er_sorted_neighborhood",
-    "kg_ppr",
-    "kg_paths_2hop",
-    "kg_graph_components",
-    "kg_kcore",
-    "kg_communities",
-    "kg_walks",
-    "kg_walk_pairs",
-    "kg_walks2",
-    "kg_degree_dist",
-    "kg_link_predict",
-    "kg_ktruss",
-    "kg_bio_tags",
-    "kg_triples",
-    "kg_triples_temporal",
-    "kg_fact_intervals",
-    "kg_fact_churn",
-    "rel_pivot",
-    "rel_cube",
-    "rel_semi_anti",
-    "rel_unpivot",
-    "kg_predicates",
-    "kg_hearst_hypernyms",
-    "kg_taxonomy_2hop",
-    "kg_taxonomy_closure",
-    "kg_taxonomy_rollup",
-    "kg_transitive_reduction",
-    "kg_assortativity",
-    "kg_dangling_refs",
-    "rel_grouping_sets",
-    "rel_quantiles",
-    "rel_interval_join",
-    "rel_funnel",
-    "rel_retention",
-    "rel_transitions",
-    "mm_phash",
-    "mm_phash_pairs",
-    "kg_closure_delta",
-    "kg_rule_mining",
-    "kg_chain_rules",
-    "kg_triple_dataset",
-    "er_phonetic_keys",
-    "er_phonetic_pairs",
-    "mm_voice_segments",
-    "kg_pronoun_coref",
-    "kg_dates",
-    "kg_clustering_coeff",
-    "txt_html_tables",
-    "kg_grounded_facts",
-    "kg_fact_certainty",
-    "kg_wl_colors",
-    "rel_skyline",
-    "kg_itemsets3",
-    "kg_nominal_coref",
-    "txt_filter_funnel",
-    "kg_appositive_types",
-    "kg_pred_functionality",
-    "kg_conflicts",
-    "kg_reciprocal_pairs",
-    "kg_conll",
-    "txt_bpe_pairs",
-    "txt_bpe_merge2",
-    "txt_sent_dedup",
-    "txt_word_pmi",
-    "dedup_shared_ngrams",
-    "dedup_winnowing",
-    "dedup_containment",
-    "kg_schema_violations",
-    "txt_kmv_registers",
-    "kg_tag_transitions",
-    "txt_hashing_tf",
-    "dedup_lsh_stats",
-    "dedup_lsh_quality",
-    "kg_negative_samples",
-    "kg_entity_contexts",
-    "kg_entity_trends",
-    "er_cluster_stats",
-    "kg_ensemble_mentions",
-    "kg_ensemble_mentions_prod",
-    "kg_ensemble_v1_tags",
-    "kg_ensemble_reconciled",
-    "er_exact_canonical",
-    "er_components",
-    "er_entity_aliases",
-    "kg_entity_cards",
-    "er_entity_linking",
-    "kg_canonical_triples",
-    "kg_triple_support",
-    "kg_ntriples",
-    "kg_triangles",
-    "txt_stats",
-    "txt_quality",
-    "txt_langid",
-    "txt_fingerprint",
-    "txt_repetition",
-    "txt_contamination",
-    "txt_source_stats",
-    "txt_redact",
-    "txt_line_dedup",
-    "txt_unigram_stats",
-    "txt_lm_score",
-    "txt_importance",
-    "txt_length_pct",
-    "txt_hll_registers",
-    "txt_cms_counters",
-    "txt_bloom_vocab",
-    "txt_tfidf",
-    "kg_common_neighbors",
-    "txt_sample_hash",
-    "txt_sample_balanced",
-    "txt_split_assign",
-    "txt_split_leakage",
-    "txt_postings",
-    "txt_length_hist",
-    "txt_bigram_lm",
-    "txt_mix_sqrt",
-    "txt_fertility",
-    "txt_curated_manifest",
-    "txt_pack_sequences",
-    "txt_pack_manifest",
-    "txt_chunks",
-    "txt_bigram_novelty",
-    "txt_mix_plan",
-    "dedup_incremental",
-    "dedup_snapshot_diff",
-    "txt_lang_mix",
-    "txt_links",
-    "txt_anchor_texts",
-    "txt_canonical",
-    "txt_host_rank",
-    "txt_host_hits",
-    "dedup_canonical",
-    "txt_host_graph",
-    "kg_entity_provenance",
-    "txt_domain_quality",
-    "kg_entity_ambiguity",
-    "kg_type_matrix",
-    "kg_triple_diff",
-    "kg_entity_salience",
-    "kg_doc_yield",
-    "txt_url_parse",
-    "txt_crawl_frontier",
-    "txt_domain_stats",
-    "txt_line_filter",
-    "txt_html_strip",
-    "txt_encoding",
-    "txt_pack_stats",
-    "kg_predicate_pairs",
-    "dedup_exact",
-    "dedup_jaccard",
-    "dedup_jaccard_exact",
-    "dedup_minhash_lsh",
-    "dedup_clusters",
-    "dedup_simhash",
-    "dedup_simhash_pairs",
-    "ann_bruteforce",
-    "ann_ivf_assign",
-    "ann_ivf_topk",
-    "ann_ivf_topk_probe",
-    "ann_recall",
-    "ann_range_search",
-    "ann_pq_codes",
-    "ann_ivfpq_topk",
-    "ann_srp_lsh",
-    "dedup_embedding_cosine",
-    "mm_media_meta",
-    "mm_ahash",
-    "mm_ahash_groups",
-    "mm_frames",
-    "mm_thumbnail",
-    "rel_agg_scan",
-    "rel_join_topk",
-    "rel_window_sessions",
-    "rel_asof_join",
-    "rel_set_union",
-    "rel_rollup",
-    "rel_zorder",
-    "rel_compaction_plan",
-    "rel_merge_upsert",
-    "txt_hot_keys",
-    "txt_url_templates",
-    "kg_tagger_agreement",
-    "kg_type_priors",
-    "kg_cooccurrence_delta",
-    "txt_warc_records",
-    "txt_robots_check",
-    "rel_snapshot_expiry",
-    "mm_audio_windows",
-    "kg_bfs_dist",
-    "kg_scc",
-    "kg_sssp",
-    "kg_butterflies",
-    "kg_msf",
-    "kg_taxonomy_depth",
-    "kg_lca",
-    "txt_bm25",
-    "dedup_ppjoin",
-    "kg_condensation",
-    "kg_entity_facts",
-    "kg_pra",
-    "txt_rake",
-    "kg_inferred_triples",
-    "kg_truth_discovery",
-    "er_em_weights",
-    "txt_textrank",
-    "kg_asof_snapshot",
-    "kg_quotations",
-    "rel_profile",
-    "er_components_delta",
-    "mm_video_scenes",
-    "rel_zone_map",
-    "kg_doc_cooccurrence",
-    "txt_vocab_coverage",
-    "dedup_substring_runs",
-    "dedup_apply_cuts",
-    "txt_readability",
-    "kg_type_inference",
-    "rel_outliers",
-    "kg_graph_stats",
-    "rel_changepoint",
-    "ann_cluster_quality",
-    "kg_rule_pca",
-    "rel_partition_skew",
-    "rel_q3_topk",
-    "kg_richclub",
-    "rel_trend",
-    "rel_scd2",
-    "txt_cosine_pairs",
-    "txt_redirect_chains",
-    "txt_rank_fusion",
-    "ann_hard_negatives",
-    "rel_late_events",
-    "rel_corr_pairs",
-    "rel_value_deciles",
-    "txt_heaps_growth",
-    "txt_canonical_conflicts",
-    "rel_interarrival",
-    "txt_token_entropy",
-    "rel_weekday_profile",
-    "kg_bowtie",
-    "kg_rpq",
-    "txt_collocation_llr",
-    "txt_zipf_slope",
-    "txt_burstiness",
-    "rel_gap_fill",
-    "rel_hopping_window",
-    "kg_simrank",
-    "er_anchor_aliases",
-    "rel_attribution",
-    "rel_debounce",
-    "kg_louvain_move",
-    "er_blocking_quality",
-    "kg_temporal_conflicts",
-    "rel_histogram",
-    "rel_q18_bigcust",
-    "ann_beam_search",
-    "rel_sequence_patterns",
-    "rel_rate_anomaly",
-    "rel_k_anonymity",
-    "rel_fd_audit",
-    "rel_join_estimate",
-    "kg_temporal_paths",
-    "kg_conjunct_facts",
-    "er_geo_pairs",
-    "er_bcubed",
-    "txt_boilerplate",
-    "txt_source_jaccard",
-    "ann_nndescent",
-    "mm_audio_match",
-    "txt_shard_ring",
-    "kg_shacl_card",
-    "rel_decay_score",
-    "txt_span_corruption",
-    "er_fs_patterns",
-    "mm_caption_groups",
-    "txt_curriculum",
-    "rel_q4_priority",
-    "rel_streaks",
-    "er_chain_audit",
-    "ann_filtered_topk",
-    "er_meta_blocking",
-    "rel_wow_change",
-    "dedup_survivorship",
-    "kg_isa_polarity",
-    "kg_property_coverage",
-    "rel_salted_join",
-    "kg_ifp_merge",
-    "rel_benford",
-    "ann_mmr_rerank",
-    "dedup_lsh_curve",
-    "er_fs_em_round",
-    "txt_instruction_density",
-    "kg_entity_sentiment",
-]
 
 SYNTH_PAGES = int(os.environ.get("BENCH_SYNTH_PAGES", "20000"))
 
@@ -391,6 +51,70 @@ BENCH_REPS = max(1, int(os.environ.get("BENCH_REPS", "3")))
 BENCH_BUDGET_S = float(os.environ.get("BENCH_BUDGET_S", "3000"))
 
 
+# The round's artifact of record keeps only the TAIL (~2 KB) of stdout —
+# r4's line died of exactly this (VERDICT r04 item 1), and at 260+ gated
+# queries a full per-query dict is ~6.5 KB, so the printed line carries the
+# headline (value = sum of ALL medians) plus a head of queries sized to stay
+# under the window; the complete medians + raw reps live in
+# bench_reps_detail.json (committed) and are streamed per-query to stderr.
+HEAD_BUDGET_BYTES = 1800
+
+
+def previous_head_keys(repo: Path) -> list[str]:
+    """The query keys the last recorded round printed: ``parsed.queries``
+    of the highest-numbered ``BENCH_rNN.json`` in ``repo`` ([] if none)."""
+    rounds = sorted(repo.glob("BENCH_r[0-9][0-9].json"))
+    if not rounds:
+        return []
+    parsed = json.loads(rounds[-1].read_text()).get("parsed") or {}
+    return list(parsed.get("queries", {}))
+
+
+def head_line(
+    times: dict[str, float], previous: list[str], passes: int, sf: float
+) -> str:
+    """The one-line record. Its query head always holds every ``previous``
+    key that was timed (so no key rotates out between rounds), then the
+    heaviest remaining queries while the line fits HEAD_BUDGET_BYTES; both
+    parts are heaviest-first by the current medians."""
+    # Scoped BENCH_ONLY runs skip the synthetic pipeline query; the
+    # throughput headline is only meaningful on the full set.
+    kg_secs = times.get("kg_pipeline_synth")
+    head = {
+        "metric": "total_bench_seconds",
+        "value": round(sum(times.values()), 3),
+        "unit": "sec",
+        "queries": {},
+        "n_queries": len(times),
+        "bench_reps": BENCH_REPS,
+        "passes": passes,
+        "sf": sf,
+        "synth_docs_per_sec": (
+            round(SYNTH_PAGES / kg_secs, 1) if kg_secs else None
+        ),
+        "full_detail": "bench_reps_detail.json",
+    }
+
+    def frag(k: str) -> int:  # `{"k":v},`: 2 bytes over what the entry adds
+        return len(json.dumps({k: times[k]}, separators=(",", ":"))) + 1
+
+    budget_bytes = HEAD_BUDGET_BYTES - len(json.dumps(head, separators=(",", ":")))
+    heavy = sorted(times, key=lambda k: (-times[k], k))
+    kept = set(previous)
+    queries = head["queries"]
+    queries.update((k, times[k]) for k in heavy if k in kept)
+    budget_bytes -= sum(frag(k) for k in queries)
+    for k in heavy:
+        if k in queries:
+            continue
+        if budget_bytes < frag(k):
+            break
+        queries[k] = times[k]
+        budget_bytes -= frag(k)
+    head["queries_omitted"] = len(times) - len(queries)
+    return json.dumps(head, separators=(",", ":"))
+
+
 def materialize(df) -> None:
     # noop sink: full evaluation of every column, nothing to the driver
     df.write.format("noop").mode("overwrite").save()
@@ -403,11 +127,8 @@ def main() -> None:
     spark = get_spark("bench", cores=cpus, shuffle_partitions=cpus)
 
     qs = entry.queries()
-    # fail loudly if a newly gated query is not in the perf record
-    missing = sorted(set(qs) - set(BENCH_QUERIES))
-    assert not missing, f"bench set missing gated queries: {missing}"
     only = [s for s in os.environ.get("BENCH_ONLY", "").split(",") if s]
-    bench_queries = [n for n in BENCH_QUERIES if n in only] if only else BENCH_QUERIES
+    bench_queries = [n for n in qs if n in only] if only else list(qs)
     # warm worker processes (dimension bundles, codegen) outside the timed
     # windows — steady-state throughput is the metric (see BENCH.md)
     materialize(
@@ -457,9 +178,6 @@ def main() -> None:
         )
 
     times = {n: round(median(reps_all[n]), 3) for n in names}
-    # Scoped BENCH_ONLY runs skip the synthetic pipeline query; the
-    # throughput headline is only meaningful on the full set.
-    kg_secs = times.get("kg_pipeline_synth")
     for name in names:
         print(f"# {name}: {times[name]}s (reps: {reps_all[name]})",
               file=sys.stderr, flush=True)
@@ -483,37 +201,7 @@ def main() -> None:
         "synth_pages": SYNTH_PAGES,
     }
     (REPO / "bench_reps_detail.json").write_text(json.dumps(detail, indent=1))
-    # The driver's artifact of record keeps only the TAIL (~2 KB) of
-    # stdout — r4's line died of exactly this (VERDICT r04 item 1), and
-    # at 260 gated queries a full per-query dict is ~6.5 KB, so the
-    # printed line carries the headline (value = sum of ALL medians) plus
-    # the HEAVIEST queries only, sized to stay safely under the window;
-    # the complete medians + raw reps live in bench_reps_detail.json
-    # (committed) and are streamed per-query to stderr above.
-    top = dict(sorted(times.items(), key=lambda kv: (-kv[1], kv[0])))
-    head = {
-        "metric": "total_bench_seconds",
-        "value": total,
-        "unit": "sec",
-        "queries": {},
-        "n_queries": len(times),
-        "bench_reps": BENCH_REPS,
-        "passes": len(pass_costs),
-        "sf": sf,
-        "synth_docs_per_sec": (
-            round(SYNTH_PAGES / kg_secs, 1) if kg_secs else None
-        ),
-        "full_detail": "bench_reps_detail.json",
-    }
-    budget_bytes = 1800 - len(json.dumps(head, separators=(",", ":")))
-    for k, v in top.items():
-        frag = len(json.dumps({k: v}, separators=(",", ":"))) + 1
-        if budget_bytes - frag < 0:
-            break
-        head["queries"][k] = v
-        budget_bytes -= frag
-    head["queries_omitted"] = len(times) - len(head["queries"])
-    print(json.dumps(head, separators=(",", ":")))
+    print(head_line(times, previous_head_keys(REPO), len(pass_costs), sf))
     spark.stop()
 
 

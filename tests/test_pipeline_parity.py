@@ -126,11 +126,13 @@ def test_slim_tagged_matches_oracle(pages, oracle):
 
 
 # marker sentences (ensemble/utils/common.py:66-79): marked tokens are the
-# mentions, a bare trailing marker is a blank-probe mention
+# mentions, a bare trailing marker is a blank-probe mention; the non-ASCII
+# lowercase mentions pin the probe's Unicode capitalization (str.islower)
 MARKER_SENTS = [
     "He felt New:__entity__ York:__entity__ has a chance .",
     "Patients with mesothelioma:__entity__ report asbestos exposure .",
     "Aspirin:__entity__ and imatinib:__entity__ treat it :__entity__",
+    "Пациенты с мезотелиома:__entity__ и ασβέστωση:__entity__ и éthanol:__entity__ .",
 ]
 
 
@@ -156,7 +158,8 @@ def test_sql_mentions_agree_with_udf_path(spark, stages, oracle):
             expected[(r.url, r.sent_idx, i)] = (
                 m.begin_tok, m.end_tok, m.surface, m.masked_sentence, m.ci_probe,
             )
-    assert sum(k[0] == "marker" for k in expected) == 5
+    assert sum(k[0] == "marker" for k in expected) == 8
+    assert "Мезотелиома is a entity" in {v[4] for v in expected.values()}
     assert got == expected
 
 

@@ -64,23 +64,16 @@ class OracleTagger:
         provider,
         entity_map: dict[str, str],
         signatures: dict[str, tuple[tuple[str, ...], tuple[int, ...]]],
-        common_descs: frozenset[str] = frozenset(),
         suppress_untagged: bool = True,
         punct_terminate: bool = True,
-        typing_version: str = "v2",
     ):
-        """``typing_version``: "v2" (batched semantics — softmax-weighted,
-        the parity oracle) or "v1" (per-mention main_NER semantics —
-        count-fraction weighting + subtype occurrence counting; see
-        kernel/typing.py:aggregate_entities_v1)."""
-        assert typing_version in ("v1", "v2")
+        """Typing uses the batched (v2, softmax-weighted) semantics of
+        kernel/typing.py:aggregate_entities."""
         self.provider = provider
         self.entity_map = entity_map
         self.signatures = signatures
-        self.common_descs = common_descs
         self.suppress_untagged = suppress_untagged
         self.punct_terminate = punct_terminate
-        self.typing_version = typing_version
         # typing-result memo: valid only when the provider declares its
         # descriptors a pure function of the surface (cache_key != None).
         # Zipfian surface distributions make this the tagging hot-path win.
@@ -96,30 +89,22 @@ class OracleTagger:
 
     def _type_side(self, descs):
         sigs = [self._signature(d) for d, _ in descs]
-        fn = (
-            T.aggregate_entities
-            if self.typing_version == "v2"
-            else T.aggregate_entities_v1
-        )
-        return fn(descs, sigs, self.entity_map, self.suppress_untagged)
+        return T.aggregate_entities(descs, sigs, self.entity_map, self.suppress_untagged)
 
     def tag_sentence(self, text: str) -> SentenceResult:
         sent = add_term_punct(text) if self.punct_terminate else text
         tokens = S.parse_tokens(sent)
         words = [t.word for t in tokens]
-        mentions_raw = S.detect_mentions(tokens)
-        mentions_kept = S.filter_common_spans(tokens, mentions_raw, self.common_descs)
-        # rebuilt bitmap reflects the common-span filter zeroing
-        # (filter_common_noun_spans, ensemble/utils/common.py:82-113)
+        mentions = S.detect_mentions(tokens)
         span_arr = [0] * len(tokens)
-        for m in mentions_kept:
+        for m in mentions:
             for i in range(m.begin_tok, m.end_tok + 1):
                 span_arr[i] = 1
         blank = S.is_blank_probe(sent)
         results: list[MentionResult] = []
         predictions: list[str] = []
         cache_key_fn = getattr(self.provider, "cache_key", lambda s, context=None: None)
-        for m in mentions_kept:
+        for m in mentions:
             mr = MentionResult(
                 begin_tok=m.begin_tok,
                 end_tok=m.end_tok,

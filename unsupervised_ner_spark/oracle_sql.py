@@ -366,7 +366,7 @@ SELECT url, sent_idx, mention_idx, surface,
                      toks[end_tok + 2:len(toks)]), ' ') AS masked_sent,
        array_to_string(
          list_transform(string_split(surface, ' '),
-           t -> CASE WHEN regexp_matches(t, '^[a-z][a-z]')
+           t -> CASE WHEN regexp_matches(t, '^\\p{Ll}\\p{Ll}')
                      THEN upper(substr(t, 1, 1)) || substr(t, 2, length(t) - 1)
                      ELSE t END), ' ') || ' is a entity' AS ci_probe
 FROM mm

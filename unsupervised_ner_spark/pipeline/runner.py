@@ -74,7 +74,8 @@ def masked_mentions_from_tagged(tagged: DataFrame) -> DataFrame:
 
     The mask is ``words`` with the span replaced by one ``__entity__``
     (kernel/spans.py:masked_sentence); the probe capitalizes each span word
-    whose first TWO letters are lowercase (batched_main_NER.py:327-335)."""
+    whose first TWO letters are lowercase (batched_main_NER.py:327-335),
+    Unicode-aware like the kernel's ``str.islower`` (``\\p{Ll}``)."""
     m = tagged.select(
         "url", "sent_idx", "words",
         F.posexplode("mentions").alias("mention_idx", "m"),
@@ -92,7 +93,7 @@ def masked_mentions_from_tagged(tagged: DataFrame) -> DataFrame:
     cap = F.transform(
         F.split(F.col("m.surface"), " "),
         lambda t: F.when(
-            t.rlike("^[a-z][a-z]"),
+            t.rlike(r"^\p{Ll}\p{Ll}"),
             F.concat(F.upper(t.substr(F.lit(1), F.lit(1))), t.substr(F.lit(2), F.length(t))),
         ).otherwise(t),
     )

@@ -70,7 +70,7 @@ def add_term_punct(sent: Column) -> Column:
     return F.when(needs, F.concat(sent, F.lit(" . "))).otherwise(sent)
 
 
-def pages_to_sentences(pages: DataFrame, punct_terminate: bool = True) -> DataFrame:
+def pages_to_sentences(pages: DataFrame) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) -> sentences(url, sent_idx,
     sent). Narrow: extract -> split on newlines -> posexplode -> blank filter
     (P3: len > 1, batched_main_NER.py:806) -> punct-terminate."""
@@ -81,5 +81,4 @@ def pages_to_sentences(pages: DataFrame, punct_terminate: bool = True) -> DataFr
     )
     sent = F.trim(F.col("raw_sent"))
     df = df.filter(F.length(sent) > 1)
-    out = add_term_punct(sent) if punct_terminate else sent
-    return df.select("url", "sent_idx", out.alias("sent"))
+    return df.select("url", "sent_idx", add_term_punct(sent).alias("sent"))
