@@ -56,7 +56,8 @@ BENCH_BUDGET_S = float(os.environ.get("BENCH_BUDGET_S", "3000"))
 # queries a full per-query dict is ~6.5 KB, so the printed line carries the
 # headline (value = sum of ALL medians) plus a head of queries sized to stay
 # under the window; the complete medians + raw reps live in
-# bench_reps_detail.json (committed) and are streamed per-query to stderr.
+# bench_reps_detail.json (committed; a BENCH_ONLY run leaves it as it is)
+# and are streamed per-query to stderr.
 HEAD_BUDGET_BYTES = 1800
 
 
@@ -200,7 +201,8 @@ def main() -> None:
         "cpus": cpus,
         "synth_pages": SYNTH_PAGES,
     }
-    (REPO / "bench_reps_detail.json").write_text(json.dumps(detail, indent=1))
+    if not only:  # a scoped run keeps the full run's detail; its reps went to stderr
+        (REPO / "bench_reps_detail.json").write_text(json.dumps(detail, indent=1))
     print(head_line(times, previous_head_keys(REPO), len(pass_costs), sf))
     spark.stop()
 

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from unsupervised_ner_spark.pipeline.er import (
@@ -74,6 +75,15 @@ def test_star_path_graph_converges_logarithmically(spark):
     # the same graph defeats min-label within the star's round budget
     _, ml_iters = connected_components(nodes, edges, max_iter=12)
     assert ml_iters == 12  # hit the cap without converging
+
+
+def test_star_raises_when_not_converged(spark):
+    """A round cap below what the graph needs fails loudly instead of
+    returning labels that are not component minima."""
+    ids = [f"n{i:03d}" for i in range(64)]
+    nodes, edges = _dfs(spark, ids, [(ids[i], ids[i + 1]) for i in range(63)])
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        connected_components_star(nodes, edges, max_iter=1)
 
 
 def test_star_matches_union_find_on_random_graphs(spark):

@@ -2,6 +2,7 @@
 checkpoint/lineage/resume."""
 
 import pytest
+from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
 from unsupervised_ner_spark.pipeline import checkpoint as cp
@@ -110,6 +111,60 @@ def test_checkpoint_commit_protocol(spark, pages, tmp_path):
     # a successful second epoch becomes visible
     cp.write_stage(df.limit(5), root, "s", wtoken="epoch-1")
     assert cp.stage_read(spark, root, "s").count() == n + 5
+
+
+def test_checkpoint_uri_root_resume_and_replay(spark, pages, tmp_path):
+    """A ``file://`` root commits, replays and resumes like a local path."""
+    root = (tmp_path / "ckpt_uri").as_uri()
+    df = pages.select("url", "lang")
+    cp.write_stage(df, root, "s", wtoken="epoch-0")
+    cp.write_stage(df, root, "s", wtoken="epoch-0")  # committed: a no-op
+    assert cp.stage_read(spark, root, "s").count() == df.count()
+    assert cp.resume_filter(pages, root, "s").count() == 0
+
+
+def test_checkpoint_replay_after_crash_before_commit(spark, pages, tmp_path, monkeypatch):
+    """A write that dies between its data files and its lineage commit,
+    replayed with the same token, leaves every row visible once."""
+    root = str(tmp_path / "ckpt_crash")
+    df = pages.select("url", "lang")
+    parquet = DataFrameWriter.parquet
+
+    def crash_on_commit(self, path, *args, **kwargs):
+        if path.endswith("/_lineage"):
+            raise RuntimeError("crash before the lineage commit")
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crash_on_commit)
+    with pytest.raises(RuntimeError, match="crash before the lineage commit"):
+        cp.write_stage(df, root, "s", wtoken="epoch-0")
+    monkeypatch.undo()
+    cp.write_stage(df, root, "s", wtoken="epoch-0")
+    assert cp.stage_read(spark, root, "s").count() == df.count()
+
+
+def test_stage_read_lists_committed_token_dirs_only(spark, pages, tmp_path):
+    """Readers list the committed tokens' directories and nothing else, and
+    each lineage row is its bucket's (row_count, checksum) of the input."""
+    root = str(tmp_path / "ckpt_files")
+    df = pages.select("url", "lang")
+    for token in ("epoch-0", "epoch-1"):
+        cp.write_stage(df, root, "s", wtoken=token)
+    committed = {"wtoken=epoch-0", "wtoken=epoch-1"}
+    # orphans of crashed writes: in the bucketed shape, then in a token's own
+    cp.with_bucket(df).withColumn("wtoken", F.lit("old")).write \
+        .partitionBy("pbucket", "wtoken").parquet(f"{root}/s", mode="append")
+    files = cp.stage_read(spark, root, "s").inputFiles()
+    assert {f.rsplit("/", 2)[-2] for f in files} == committed
+    cp.with_bucket(df).write.parquet(f"{root}/s/wtoken=crashed")
+    files = cp.stage_read(spark, root, "s").inputFiles()
+    assert {f.rsplit("/", 2)[-2] for f in files} == committed
+    want = cp.with_bucket(df).groupBy("pbucket").agg(
+        F.count("*").alias("row_count"),
+        F.bit_xor(F.xxhash64("url", "lang")).alias("checksum"),
+    ).collect()
+    got = cp.stage_metrics(spark, root).filter(F.col("wtoken") == "epoch-0")
+    assert sorted(got.select("pbucket", "row_count", "checksum").collect()) == sorted(want)
 
 
 def test_checkpoint_resume(spark, pages, tmp_path):

@@ -290,7 +290,8 @@ def connected_components_star(
     - small-star: per node u over its ≤-neighbors N = {v ∈ Γ(u): v < u},
       m = min(N ∪ {u}); emit (v, m) for v ∈ N ∪ {u}, v ≠ m.
     Terminates when the (distinct, canonicalized) edge set is stable —
-    detected by an O(1) (count, hash-sum) aggregate, not a set compare.
+    detected by an O(1) (count, hash-sum) aggregate, not a set compare;
+    raises RuntimeError if ``max_iter`` rounds end without that.
     Each round localCheckpoints to keep lineage bounded.
 
     Execution shape (round-6 optimization, guide §2.4): each star's
@@ -363,6 +364,9 @@ def connected_components_star(
         if new_fp == fp:
             break
         fp = new_fp
+    else:
+        # non-converged stars are not component minima: never return them
+        raise RuntimeError(f"star CC did not converge in {max_iter} rounds")
     # stars: every edge is (member, root=component min); roots and isolated
     # nodes label themselves
     member = E.select(F.col("b").alias("node_id"), F.col("a").alias("component"))

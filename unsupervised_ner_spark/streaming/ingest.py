@@ -5,8 +5,9 @@ parquet page files and, per micro-batch, runs the production tagging
 pipeline and appends token tags + lineage via the checkpoint writer.
 Exactly-once VISIBLE semantics: the stream's checkpointLocation makes the
 source at-least-once, and the epoch id is passed as the checkpoint wtoken —
-a replayed epoch is either skipped (already committed) or re-writes files
-that stay invisible until its single lineage commit lands
+a replayed epoch is either skipped (already committed) or overwrites its
+own ``wtoken=epoch-<id>`` directory, dropping the crashed attempt's files,
+and becomes visible when its single lineage commit lands
 (pipeline/checkpoint.py commit protocol).
 
 The transformation graph inside each micro-batch is identical to the batch
