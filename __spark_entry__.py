@@ -5,6 +5,11 @@ a (spark, sf_dir) -> DataFrame callable; ``oracle_sql()`` provides the
 DuckDB twin (built in unsupervised_ner_spark/oracle_sql.py) run side-by-side
 by the driver at sf=0.01.
 
+Each gated query is declared once, as a ``q_<name>`` function here: both
+registries are derived from those functions. ``oracle_sql()`` calls
+``oracle_sql.<name>()`` unless its table of exceptions says otherwise, and
+raises for a query with no oracle (tests/test_registry.py pins this).
+
 Conventions shared by both engines:
 - all integer outputs are 64-bit; floats never appear in hashed columns
   (ranks/ids/counts carry the information);
@@ -5887,687 +5892,123 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "kg_sentences": q_kg_sentences,
-        "kg_mentions": q_kg_mentions,
-        "kg_mentions_pos": q_kg_mentions_pos,
-        "kg_masks": q_kg_masks,
-        "kg_typed_mentions": q_kg_typed_mentions,
-        "kg_cooccurrence": q_kg_cooccurrence,
-        "kg_cooccurrence_npmi": q_kg_cooccurrence_npmi,
-        "kg_entity_degree": q_kg_entity_degree,
-        "kg_pagerank": q_kg_pagerank,
-        "kg_hits": q_kg_hits,
-        "kg_landmark_centrality": q_kg_landmark_centrality,
-        "kg_relation_candidates": q_kg_relation_candidates,
-        "kg_modularity": q_kg_modularity,
-        "kg_kge_eval": q_kg_kge_eval,
-        "kg_kge_distmult": q_kg_kge_distmult,
-        "kg_kge_complex": q_kg_kge_complex,
-        "kg_anf": q_kg_anf,
-        "kg_mis": q_kg_mis,
-        "kg_coloring": q_kg_coloring,
-        "kg_topo_layers": q_kg_topo_layers,
-        "txt_c4_filters": q_txt_c4_filters,
-        "kg_role_facts": q_kg_role_facts,
-        "kg_measurements": q_kg_measurements,
-        "rel_retention": q_rel_retention,
-        "txt_vocab_drift": q_txt_vocab_drift,
-        "kg_matching": q_kg_matching,
-        "rel_transitions": q_rel_transitions,
-        "kg_bipartite": q_kg_bipartite,
-        "kg_lca": q_kg_lca,
-        "txt_good_turing": q_txt_good_turing,
-        "rel_bloom_semijoin": q_rel_bloom_semijoin,
-        "kg_katz": q_kg_katz,
-        "kg_acronyms": q_kg_acronyms,
-        "kg_densest": q_kg_densest,
-        "kg_coreness": q_kg_coreness,
-        "txt_max_coverage": q_txt_max_coverage,
-        "er_pair_features": q_er_pair_features,
-        "er_em_weights": q_er_em_weights,
-        "txt_textrank": q_txt_textrank,
-        "kg_path_counts": q_kg_path_counts,
-        "txt_sitemaps": q_txt_sitemaps,
-        "kg_motif_census": q_kg_motif_census,
-        "kg_ego_export": q_kg_ego_export,
-        "kg_local_bridges": q_kg_local_bridges,
-        "txt_budget_select": q_txt_budget_select,
-        "txt_gopher_flags": q_txt_gopher_flags,
-        "kg_sameas": q_kg_sameas,
-        "ann_kmeans_update": q_ann_kmeans_update,
-        "kg_pred_signatures": q_kg_pred_signatures,
-        "kg_betweenness": q_kg_betweenness,
-        "er_sorted_neighborhood": q_er_sorted_neighborhood,
-        "kg_paths_2hop": q_kg_paths_2hop,
-        "kg_graph_components": q_kg_graph_components,
-        "kg_kcore": q_kg_kcore,
-        "kg_communities": q_kg_communities,
-        "kg_walks": q_kg_walks,
-        "kg_fact_intervals": q_kg_fact_intervals,
-        "kg_walk_pairs": q_kg_walk_pairs,
-        "kg_degree_dist": q_kg_degree_dist,
-        "kg_fact_churn": q_kg_fact_churn,
-        "kg_link_predict": q_kg_link_predict,
-        "kg_ktruss": q_kg_ktruss,
-        "rel_pivot": q_rel_pivot,
-        "rel_cube": q_rel_cube,
-        "txt_crawl_frontier": q_txt_crawl_frontier,
-        "txt_lm_score": q_txt_lm_score,
-        "txt_importance": q_txt_importance,
-        "kg_bio_tags": q_kg_bio_tags,
-        "kg_triples": q_kg_triples,
-        "kg_predicates": q_kg_predicates,
-        "kg_hearst_hypernyms": q_kg_hearst_hypernyms,
-        "kg_taxonomy_2hop": q_kg_taxonomy_2hop,
-        "kg_taxonomy_closure": q_kg_taxonomy_closure,
-        "kg_taxonomy_rollup": q_kg_taxonomy_rollup,
-        "kg_transitive_reduction": q_kg_transitive_reduction,
-        "kg_assortativity": q_kg_assortativity,
-        "kg_dangling_refs": q_kg_dangling_refs,
-        "rel_grouping_sets": q_rel_grouping_sets,
-        "rel_quantiles": q_rel_quantiles,
-        "rel_interval_join": q_rel_interval_join,
-        "rel_funnel": q_rel_funnel,
-        "mm_phash": q_mm_phash,
-        "mm_phash_pairs": q_mm_phash_pairs,
-        "kg_closure_delta": q_kg_closure_delta,
-        "kg_rule_mining": q_kg_rule_mining,
-        "kg_chain_rules": q_kg_chain_rules,
-        "kg_triple_dataset": q_kg_triple_dataset,
-        "er_phonetic_keys": q_er_phonetic_keys,
-        "er_phonetic_pairs": q_er_phonetic_pairs,
-        "mm_voice_segments": q_mm_voice_segments,
-        "kg_pronoun_coref": q_kg_pronoun_coref,
-        "kg_dates": q_kg_dates,
-        "kg_clustering_coeff": q_kg_clustering_coeff,
-        "txt_html_tables": q_txt_html_tables,
-        "kg_grounded_facts": q_kg_grounded_facts,
-        "kg_fact_certainty": q_kg_fact_certainty,
-        "kg_wl_colors": q_kg_wl_colors,
-        "rel_skyline": q_rel_skyline,
-        "kg_itemsets3": q_kg_itemsets3,
-        "kg_nominal_coref": q_kg_nominal_coref,
-        "txt_filter_funnel": q_txt_filter_funnel,
-        "kg_appositive_types": q_kg_appositive_types,
-        "kg_pred_functionality": q_kg_pred_functionality,
-        "kg_conflicts": q_kg_conflicts,
-        "kg_reciprocal_pairs": q_kg_reciprocal_pairs,
-        "kg_conll": q_kg_conll,
-        "txt_bpe_pairs": q_txt_bpe_pairs,
-        "txt_hashing_tf": q_txt_hashing_tf,
-        "txt_sent_dedup": q_txt_sent_dedup,
-        "txt_word_pmi": q_txt_word_pmi,
-        "dedup_shared_ngrams": q_dedup_shared_ngrams,
-        "dedup_substring_runs": q_dedup_substring_runs,
-        "dedup_apply_cuts": q_dedup_apply_cuts,
-        "txt_readability": q_txt_readability,
-        "kg_type_inference": q_kg_type_inference,
-        "rel_outliers": q_rel_outliers,
-        "kg_graph_stats": q_kg_graph_stats,
-        "rel_changepoint": q_rel_changepoint,
-        "ann_cluster_quality": q_ann_cluster_quality,
-        "kg_rule_pca": q_kg_rule_pca,
-        "rel_partition_skew": q_rel_partition_skew,
-        "rel_q3_topk": q_rel_q3_topk,
-        "kg_richclub": q_kg_richclub,
-        "rel_trend": q_rel_trend,
-        "rel_scd2": q_rel_scd2,
-        "txt_cosine_pairs": q_txt_cosine_pairs,
-        "txt_redirect_chains": q_txt_redirect_chains,
-        "txt_rank_fusion": q_txt_rank_fusion,
-        "ann_hard_negatives": q_ann_hard_negatives,
-        "rel_late_events": q_rel_late_events,
-        "rel_corr_pairs": q_rel_corr_pairs,
-        "rel_value_deciles": q_rel_value_deciles,
-        "txt_heaps_growth": q_txt_heaps_growth,
-        "txt_canonical_conflicts": q_txt_canonical_conflicts,
-        "rel_interarrival": q_rel_interarrival,
-        "txt_token_entropy": q_txt_token_entropy,
-        "rel_weekday_profile": q_rel_weekday_profile,
-        "rel_gap_fill": q_rel_gap_fill,
-        "rel_sequence_patterns": q_rel_sequence_patterns,
-        "kg_temporal_paths": q_kg_temporal_paths,
-        "txt_shard_ring": q_txt_shard_ring,
-        "rel_k_anonymity": q_rel_k_anonymity,
-        "ann_nndescent": q_ann_nndescent,
-        "mm_audio_match": q_mm_audio_match,
-        "txt_boilerplate": q_txt_boilerplate,
-        "er_geo_pairs": q_er_geo_pairs,
-        "kg_conjunct_facts": q_kg_conjunct_facts,
-        "rel_rate_anomaly": q_rel_rate_anomaly,
-        "rel_fd_audit": q_rel_fd_audit,
-        "rel_join_estimate": q_rel_join_estimate,
-        "er_bcubed": q_er_bcubed,
-        "txt_source_jaccard": q_txt_source_jaccard,
-        "kg_shacl_card": q_kg_shacl_card,
-        "rel_decay_score": q_rel_decay_score,
-        "rel_attribution": q_rel_attribution,
-        "rel_debounce": q_rel_debounce,
-        "kg_louvain_move": q_kg_louvain_move,
-        "er_blocking_quality": q_er_blocking_quality,
-        "kg_temporal_conflicts": q_kg_temporal_conflicts,
-        "rel_histogram": q_rel_histogram,
-        "rel_q18_bigcust": q_rel_q18_bigcust,
-        "ann_beam_search": q_ann_beam_search,
-        "txt_span_corruption": q_txt_span_corruption,
-        "er_fs_patterns": q_er_fs_patterns,
-        "mm_caption_groups": q_mm_caption_groups,
-        "txt_curriculum": q_txt_curriculum,
-        "rel_q4_priority": q_rel_q4_priority,
-        "rel_streaks": q_rel_streaks,
-        "er_chain_audit": q_er_chain_audit,
-        "ann_filtered_topk": q_ann_filtered_topk,
-        "er_meta_blocking": q_er_meta_blocking,
-        "rel_wow_change": q_rel_wow_change,
-        "dedup_survivorship": q_dedup_survivorship,
-        "kg_isa_polarity": q_kg_isa_polarity,
-        "kg_property_coverage": q_kg_property_coverage,
-        "rel_salted_join": q_rel_salted_join,
-        "kg_ifp_merge": q_kg_ifp_merge,
-        "rel_benford": q_rel_benford,
-        "ann_mmr_rerank": q_ann_mmr_rerank,
-        "dedup_lsh_curve": q_dedup_lsh_curve,
-        "er_fs_em_round": q_er_fs_em_round,
-        "txt_instruction_density": q_txt_instruction_density,
-        "kg_entity_sentiment": q_kg_entity_sentiment,
-        "rel_hopping_window": q_rel_hopping_window,
-        "txt_collocation_llr": q_txt_collocation_llr,
-        "txt_zipf_slope": q_txt_zipf_slope,
-        "txt_burstiness": q_txt_burstiness,
-        "kg_tag_transitions": q_kg_tag_transitions,
-        "dedup_lsh_stats": q_dedup_lsh_stats,
-        "kg_negative_samples": q_kg_negative_samples,
-        "kg_entity_contexts": q_kg_entity_contexts,
-        "kg_entity_trends": q_kg_entity_trends,
-        "er_cluster_stats": q_er_cluster_stats,
-        "kg_ensemble_mentions": q_kg_ensemble_mentions_prod,
-        "kg_ensemble_mentions_prod": q_kg_ensemble_mentions_prod,
-        "kg_ensemble_v1_tags": q_kg_ensemble_v1_tags,
-        "kg_ensemble_reconciled": q_kg_ensemble_reconciled,
-        "txt_stats": q_txt_stats,
-        "txt_quality": q_txt_quality,
-        "txt_langid": q_txt_langid,
-        "txt_fingerprint": q_txt_fingerprint,
-        "txt_repetition": q_txt_repetition,
-        "txt_contamination": q_txt_contamination,
-        "txt_source_stats": q_txt_source_stats,
-        "txt_redact": q_txt_redact,
-        "txt_line_dedup": q_txt_line_dedup,
-        "txt_unigram_stats": q_txt_unigram_stats,
-        "txt_length_pct": q_txt_length_pct,
-        "txt_hll_registers": q_txt_hll_registers,
-        "txt_cms_counters": q_txt_cms_counters,
-        "txt_bloom_vocab": q_txt_bloom_vocab,
-        "txt_tfidf": q_txt_tfidf,
-        "kg_common_neighbors": q_kg_common_neighbors,
-        "txt_sample_hash": q_txt_sample_hash,
-        "txt_sample_balanced": q_txt_sample_balanced,
-        "txt_split_assign": q_txt_split_assign,
-        "txt_split_leakage": q_txt_split_leakage,
-        "txt_postings": q_txt_postings,
-        "txt_length_hist": q_txt_length_hist,
-        "txt_bigram_lm": q_txt_bigram_lm,
-        "txt_mix_sqrt": q_txt_mix_sqrt,
-        "txt_fertility": q_txt_fertility,
-        "txt_curated_manifest": q_txt_curated_manifest,
-        "txt_pack_sequences": q_txt_pack_sequences,
-        "txt_pack_manifest": q_txt_pack_manifest,
-        "txt_chunks": q_txt_chunks,
-        "txt_bigram_novelty": q_txt_bigram_novelty,
-        "txt_mix_plan": q_txt_mix_plan,
-        "dedup_incremental": q_dedup_incremental,
-        "dedup_snapshot_diff": q_dedup_snapshot_diff,
-        "txt_lang_mix": q_txt_lang_mix,
-        "txt_links": q_txt_links,
-        "txt_anchor_texts": q_txt_anchor_texts,
-        "txt_canonical": q_txt_canonical,
-        "txt_host_rank": q_txt_host_rank,
-        "txt_host_hits": q_txt_host_hits,
-        "dedup_canonical": q_dedup_canonical,
-        "txt_host_graph": q_txt_host_graph,
-        "kg_entity_provenance": q_kg_entity_provenance,
-        "txt_domain_quality": q_txt_domain_quality,
-        "kg_entity_ambiguity": q_kg_entity_ambiguity,
-        "kg_type_matrix": q_kg_type_matrix,
-        "kg_triple_diff": q_kg_triple_diff,
-        "kg_entity_salience": q_kg_entity_salience,
-        "kg_doc_yield": q_kg_doc_yield,
-        "txt_url_parse": q_txt_url_parse,
-        "txt_domain_stats": q_txt_domain_stats,
-        "txt_line_filter": q_txt_line_filter,
-        "txt_html_strip": q_txt_html_strip,
-        "txt_encoding": q_txt_encoding,
-        "txt_pack_stats": q_txt_pack_stats,
-        "kg_predicate_pairs": q_kg_predicate_pairs,
-        "dedup_exact": q_dedup_exact,
-        "dedup_jaccard": q_dedup_jaccard,
-        "dedup_jaccard_exact": q_dedup_jaccard_exact,
-        "dedup_minhash_lsh": q_dedup_minhash_lsh,
-        "dedup_clusters": q_dedup_clusters,
-        "dedup_simhash": q_dedup_simhash,
-        "dedup_simhash_pairs": q_dedup_simhash_pairs,
-        "dedup_embedding_cosine": q_dedup_embedding_cosine,
-        "ann_bruteforce": q_ann_bruteforce,
-        "ann_ivf_assign": q_ann_ivf_assign,
-        "ann_ivf_topk": q_ann_ivf_topk,
-        "ann_ivf_topk_probe": q_ann_ivf_topk_probe,
-        "ann_range_search": q_ann_range_search,
-        "ann_pq_codes": q_ann_pq_codes,
-        "ann_ivfpq_topk": q_ann_ivfpq_topk,
-        "mm_media_meta": q_mm_media_meta,
-        "mm_ahash": q_mm_ahash,
-        "mm_ahash_groups": q_mm_ahash_groups,
-        "kg_ppr": q_kg_ppr,
-        "dedup_winnowing": q_dedup_winnowing,
-        "kg_schema_violations": q_kg_schema_violations,
-        "txt_kmv_registers": q_txt_kmv_registers,
-        "dedup_containment": q_dedup_containment,
-        "rel_semi_anti": q_rel_semi_anti,
-        "txt_bpe_merge2": q_txt_bpe_merge2,
-        "kg_walks2": q_kg_walks2,
-        "rel_unpivot": q_rel_unpivot,
-        "ann_recall": q_ann_recall,
-        "dedup_lsh_quality": q_dedup_lsh_quality,
-        "mm_frames": q_mm_frames,
-        "mm_thumbnail": q_mm_thumbnail,
-        "er_exact_canonical": q_er_exact_canonical,
-        "er_components": q_er_components,
-        "er_entity_aliases": q_er_entity_aliases,
-        "kg_entity_cards": q_kg_entity_cards,
-        "er_entity_linking": q_er_entity_linking,
-        "kg_triples_temporal": q_kg_triples_temporal,
-        "ann_srp_lsh": q_ann_srp_lsh,
-        "kg_canonical_triples": q_kg_canonical_triples,
-        "kg_triple_support": q_kg_triple_support,
-        "kg_ntriples": q_kg_ntriples,
-        "kg_triangles": q_kg_triangles,
-        "rel_agg_scan": q_rel_agg_scan,
-        "rel_join_topk": q_rel_join_topk,
-        "rel_window_sessions": q_rel_window_sessions,
-        "rel_asof_join": q_rel_asof_join,
-        "rel_set_union": q_rel_set_union,
-        "rel_rollup": q_rel_rollup,
-        "rel_zorder": q_rel_zorder,
-        "rel_compaction_plan": q_rel_compaction_plan,
-        "rel_merge_upsert": q_rel_merge_upsert,
-        "txt_hot_keys": q_txt_hot_keys,
-        "txt_url_templates": q_txt_url_templates,
-        "kg_tagger_agreement": q_kg_tagger_agreement,
-        "kg_type_priors": q_kg_type_priors,
-        "kg_cooccurrence_delta": q_kg_cooccurrence_delta,
-        "txt_warc_records": q_txt_warc_records,
-        "txt_robots_check": q_txt_robots_check,
-        "rel_snapshot_expiry": q_rel_snapshot_expiry,
-        "mm_audio_windows": q_mm_audio_windows,
-        "kg_bfs_dist": q_kg_bfs_dist,
-        "kg_scc": q_kg_scc,
-        "kg_sssp": q_kg_sssp,
-        "kg_butterflies": q_kg_butterflies,
-        "kg_msf": q_kg_msf,
-        "kg_taxonomy_depth": q_kg_taxonomy_depth,
-        "txt_bm25": q_txt_bm25,
-        "dedup_ppjoin": q_dedup_ppjoin,
-        "kg_condensation": q_kg_condensation,
-        "kg_bowtie": q_kg_bowtie,
-        "kg_rpq": q_kg_rpq,
-        "kg_simrank": q_kg_simrank,
-        "kg_entity_facts": q_kg_entity_facts,
-        "kg_pra": q_kg_pra,
-        "txt_rake": q_txt_rake,
-        "kg_inferred_triples": q_kg_inferred_triples,
-        "kg_truth_discovery": q_kg_truth_discovery,
-        "kg_asof_snapshot": q_kg_asof_snapshot,
-        "kg_quotations": q_kg_quotations,
-        "rel_profile": q_rel_profile,
-        "er_components_delta": q_er_components_delta,
-        "mm_video_scenes": q_mm_video_scenes,
-        "rel_zone_map": q_rel_zone_map,
-        "kg_doc_cooccurrence": q_kg_doc_cooccurrence,
-        "txt_vocab_coverage": q_txt_vocab_coverage,
-        "er_anchor_aliases": q_er_anchor_aliases,
-    }
+    """Every ``q_<name>`` function of this module as ``<name>``, in
+    definition order, plus one alias: ``kg_ensemble_mentions`` gates the
+    same production ensemble as ``kg_ensemble_mentions_prod``."""
+    qs = {n[2:]: f for n, f in globals().items() if n.startswith("q_") and callable(f)}
+    qs["kg_ensemble_mentions"] = q_kg_ensemble_mentions_prod
+    return qs
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "kg_sentences": O.kg_sentences(),
-        "kg_mentions": O.kg_mentions(),
-        "kg_mentions_pos": O.kg_mentions_pos(),
-        "kg_masks": O.kg_masks(),
-        "kg_typed_mentions": O.kg_typed_mentions(),
-        "kg_cooccurrence": O.kg_cooccurrence(),
-        "kg_cooccurrence_npmi": O.kg_cooccurrence_npmi(),
-        "kg_entity_degree": O.kg_entity_degree(),
-        "kg_pagerank": O.kg_pagerank(),
-        "kg_hits": O.kg_hits(rounds=2),
-        "kg_landmark_centrality": O.kg_landmark_centrality(rounds=3, n_seeds=3),
-        "kg_relation_candidates": O.kg_relation_candidates(),
-        "kg_modularity": O.kg_modularity(iterations=4),
-        "kg_kge_eval": O.kg_kge_eval(dim=4, emb_mod=1000),
-        "kg_kge_distmult": O.kg_kge_eval(dim=4, emb_mod=1000, score_fn="distmult"),
-        "kg_kge_complex": O.kg_kge_eval(dim=4, emb_mod=1000, score_fn="complex"),
-        "kg_anf": O.kg_anf(rounds=2),
-        "kg_mis": O.kg_mis(rounds=3),
-        "kg_coloring": O.kg_coloring(rounds=3),
-        "kg_topo_layers": O.kg_topo_layers(rounds=5),
-        "txt_c4_filters": O.txt_c4_filters(
+    """The DuckDB twin of every ``queries()`` key: ``O.<name>()`` unless
+    the table below says otherwise (arguments, a shared oracle, or inline
+    SQL). A key with neither raises ``AttributeError``."""
+    special: dict[str, Callable[[], str]] = {
+        "kg_hits": lambda: O.kg_hits(rounds=2),
+        "kg_landmark_centrality": lambda: O.kg_landmark_centrality(rounds=3, n_seeds=3),
+        "kg_modularity": lambda: O.kg_modularity(iterations=4),
+        "kg_kge_eval": lambda: O.kg_kge_eval(dim=4, emb_mod=1000),
+        "kg_kge_distmult": lambda: O.kg_kge_eval(dim=4, emb_mod=1000, score_fn="distmult"),
+        "kg_kge_complex": lambda: O.kg_kge_eval(dim=4, emb_mod=1000, score_fn="complex"),
+        "kg_anf": lambda: O.kg_anf(rounds=2),
+        "kg_mis": lambda: O.kg_mis(rounds=3),
+        "kg_coloring": lambda: O.kg_coloring(rounds=3),
+        "kg_topo_layers": lambda: O.kg_topo_layers(rounds=5),
+        "txt_c4_filters": lambda: O.txt_c4_filters(
             C4_LOREM_REM, C4_BRACE_REM, C4_POLICY_REM, mod=C4_MOD,
         ),
-        "rel_retention": O.rel_retention(
+        "rel_retention": lambda: O.rel_retention(
             period_days=7, churn_mod=RETENTION_CHURN_MOD,
             churn_day=RETENTION_CHURN_DAY, late_day=RETENTION_LATE_DAY,
         ),
-        "txt_vocab_drift": O.txt_vocab_drift(
+        "txt_vocab_drift": lambda: O.txt_vocab_drift(
             ratio_num=2, a_splice=DRIFT_A_SPLICE, b_splice=DRIFT_B_SPLICE,
         ),
-        "kg_matching": O.kg_matching(rounds=2),
-        "rel_transitions": O.rel_transitions(),
-        "kg_bipartite": O.kg_bipartite(rounds=4),
-        "kg_lca": O.kg_lca(
+        "kg_matching": lambda: O.kg_matching(rounds=2),
+        "kg_bipartite": lambda: O.kg_bipartite(rounds=4),
+        "kg_lca": lambda: O.kg_lca(
             HEARST_MOD, HEARST_HYPO, HEARST_HYPER, HEARST_HYPER2
         ),
-        "kg_role_facts": O.kg_role_facts(
+        "kg_role_facts": lambda: O.kg_role_facts(
             ROLE_MOD, ROLE_PERSONS, ROLE_ROLES, ROLE_ORGS,
         ),
-        "kg_measurements": O.kg_measurements(
+        "kg_measurements": lambda: O.kg_measurements(
             MEAS_MOD, MEAS_REM, MEAS_ENTS, MEAS_VERBS, MEAS_UNIT_TERMS,
         ),
-        "txt_good_turing": O.txt_good_turing(),
-        "rel_bloom_semijoin": O.rel_bloom_semijoin(m=1024, k=2),
-        "kg_katz": O.kg_katz(),
-        "kg_acronyms": O.kg_acronyms(
+        "rel_bloom_semijoin": lambda: O.rel_bloom_semijoin(m=1024, k=2),
+        "kg_acronyms": lambda: O.kg_acronyms(
             ACRO_MOD, ACRO_VALID_REM, ACRO_BOGUS_REM, ACRO_LONG, ACRO_SHORT,
             ACRO_BOGUS_SHORT,
         ),
-        "kg_densest": O.kg_densest(rounds=4),
-        "kg_coreness": O.kg_coreness(rounds=3),
-        "txt_max_coverage": O.txt_max_coverage(k=5),
-        "er_pair_features": O.er_pair_features(),
-        "er_em_weights": O.er_em_weights(),
-        "txt_textrank": O.txt_textrank(),
-        "kg_path_counts": O.kg_path_counts(rounds=3, n_seeds=3),
-        "txt_sitemaps": O.txt_sitemaps(),
-        "kg_motif_census": O.kg_motif_census(),
-        "kg_ego_export": O.kg_ego_export(hops=2),
-        "kg_local_bridges": O.kg_local_bridges(),
-        "txt_budget_select": O.txt_budget_select(),
-        "txt_gopher_flags": O.txt_gopher_flags(),
-        "kg_sameas": O.kg_sameas(),
-        "ann_kmeans_update": O.ann_kmeans_update(),
-        "kg_pred_signatures": O.kg_pred_signatures(),
-        "kg_betweenness": O.kg_betweenness(rounds=3, n_seeds=3),
-        "er_sorted_neighborhood": O.er_sorted_neighborhood(window=3, max_lev=2),
-        "kg_paths_2hop": O.kg_paths_2hop(),
-        "kg_graph_components": O.kg_graph_components(),
-        "kg_kcore": O.kg_kcore(),
-        "kg_communities": O.kg_communities(),
-        "kg_walks": O.kg_walks(),
-        "kg_fact_intervals": O.kg_fact_intervals(),
-        "kg_walk_pairs": O.kg_walk_pairs(),
-        "kg_degree_dist": O.kg_degree_dist(),
-        "kg_fact_churn": O.kg_fact_churn(),
-        "kg_link_predict": O.kg_link_predict(),
-        "kg_ktruss": O.kg_ktruss(),
-        "rel_pivot": O.rel_pivot(),
-        "rel_cube": O.rel_cube(),
-        "txt_crawl_frontier": O.txt_crawl_frontier(),
-        "txt_lm_score": O.txt_lm_score(),
-        "txt_importance": O.txt_importance(),
-        "kg_bio_tags": O.kg_bio_tags(),
-        "kg_triples": O.kg_triples(),
-        "kg_predicates": O.kg_predicates(),
-        "kg_hearst_hypernyms": O.kg_hearst_hypernyms(
+        "kg_densest": lambda: O.kg_densest(rounds=4),
+        "kg_coreness": lambda: O.kg_coreness(rounds=3),
+        "txt_max_coverage": lambda: O.txt_max_coverage(k=5),
+        "kg_path_counts": lambda: O.kg_path_counts(rounds=3, n_seeds=3),
+        "kg_ego_export": lambda: O.kg_ego_export(hops=2),
+        "kg_betweenness": lambda: O.kg_betweenness(rounds=3, n_seeds=3),
+        "er_sorted_neighborhood": lambda: O.er_sorted_neighborhood(window=3, max_lev=2),
+        "kg_hearst_hypernyms": lambda: O.kg_hearst_hypernyms(
             HEARST_MOD, HEARST_HYPO, HEARST_HYPER, HEARST_HYPER2
         ),
-        "kg_taxonomy_2hop": O.kg_taxonomy_2hop(
+        "kg_taxonomy_2hop": lambda: O.kg_taxonomy_2hop(
             HEARST_MOD, HEARST_HYPO, HEARST_HYPER, HEARST_HYPER2
         ),
-        "kg_taxonomy_closure": O.kg_taxonomy_closure(
+        "kg_taxonomy_closure": lambda: O.kg_taxonomy_closure(
             HEARST_MOD, HEARST_HYPO, HEARST_HYPER, HEARST_HYPER2
         ),
-        "kg_taxonomy_rollup": O.kg_taxonomy_rollup(
+        "kg_taxonomy_rollup": lambda: O.kg_taxonomy_rollup(
             HEARST_MOD, HEARST_HYPO, HEARST_HYPER, HEARST_HYPER2
         ),
-        "kg_transitive_reduction": O.kg_transitive_reduction(
+        "kg_transitive_reduction": lambda: O.kg_transitive_reduction(
             HEARST_MOD, HEARST_HYPO, HEARST_HYPER, HEARST_HYPER2
         ),
-        "kg_assortativity": O.kg_assortativity(),
-        "kg_dangling_refs": O.kg_dangling_refs(),
-        "rel_grouping_sets": O.rel_grouping_sets(),
-        "rel_quantiles": O.rel_quantiles(),
-        "rel_interval_join": O.rel_interval_join(),
-        "rel_funnel": O.rel_funnel(drop_mod=FUNNEL_DROP_MOD),
-        "mm_phash": O.mm_phash(),
-        "mm_phash_pairs": O.mm_phash_pairs(),
-        "kg_closure_delta": O.kg_closure_delta(
+        "rel_funnel": lambda: O.rel_funnel(drop_mod=FUNNEL_DROP_MOD),
+        "kg_closure_delta": lambda: O.kg_closure_delta(
             HEARST_MOD, HEARST_HYPO, HEARST_HYPER, HEARST_HYPER2
         ),
-        "kg_rule_mining": O.kg_rule_mining(),
-        "kg_chain_rules": O.kg_chain_rules(),
-        "kg_triple_dataset": O.kg_triple_dataset(),
-        "er_phonetic_keys": O.er_phonetic_keys(),
-        "er_phonetic_pairs": O.er_phonetic_pairs(),
-        "mm_voice_segments": O.mm_voice_segments(),
-        "kg_pronoun_coref": O.kg_pronoun_coref(),
-        "kg_dates": O.kg_dates(),
-        "kg_clustering_coeff": O.kg_clustering_coeff(),
-        "txt_html_tables": O.txt_html_tables(),
-        "kg_grounded_facts": O.kg_grounded_facts(),
-        "kg_fact_certainty": O.kg_fact_certainty(),
-        "kg_wl_colors": O.kg_wl_colors(),
-        "rel_skyline": O.rel_skyline(),
-        "kg_itemsets3": O.kg_itemsets3(),
-        "kg_nominal_coref": O.kg_nominal_coref(),
-        "txt_filter_funnel": O.txt_filter_funnel(),
-        "kg_appositive_types": O.kg_appositive_types(
+        "kg_appositive_types": lambda: O.kg_appositive_types(
             APPOS_MOD, APPOS_INST, APPOS_CLS
         ),
-        "kg_pred_functionality": O.kg_pred_functionality(),
-        "kg_conflicts": O.kg_conflicts(),
-        "kg_reciprocal_pairs": O.kg_reciprocal_pairs(),
-        "kg_conll": O.kg_conll(),
-        "txt_bpe_pairs": O.txt_bpe_pairs(),
-        "txt_hashing_tf": O.txt_hashing_tf(),
-        "txt_sent_dedup": O.txt_sent_dedup(
+        "txt_sent_dedup": lambda: O.txt_sent_dedup(
             HEARST_MOD, HEARST_HYPO, HEARST_HYPER, HEARST_HYPER2
         ),
-        "txt_word_pmi": O.txt_word_pmi(),
-        "dedup_shared_ngrams": O.dedup_shared_ngrams(
+        "dedup_shared_ngrams": lambda: O.dedup_shared_ngrams(
             HEARST_MOD, HEARST_HYPO, HEARST_HYPER, HEARST_HYPER2
         ),
-        "dedup_substring_runs": O.dedup_substring_runs(
+        "dedup_substring_runs": lambda: O.dedup_substring_runs(
             RUNS_MOD, RUNS_HALF_RES, RUNS_BLOCKS, RUNS_HALF_TOKS
         ),
-        "dedup_apply_cuts": O.dedup_apply_cuts(
+        "dedup_apply_cuts": lambda: O.dedup_apply_cuts(
             RUNS_MOD, RUNS_HALF_RES, RUNS_BLOCKS, RUNS_HALF_TOKS
         ),
-        "txt_readability": O.txt_readability(),
-        "kg_type_inference": O.kg_type_inference(),
-        "rel_outliers": O.rel_outliers(),
-        "kg_graph_stats": O.kg_graph_stats(),
-        "rel_changepoint": O.rel_changepoint(),
-        "ann_cluster_quality": O.ann_cluster_quality(),
-        "kg_rule_pca": O.kg_rule_pca(),
-        "rel_partition_skew": O.rel_partition_skew(),
-        "rel_q3_topk": O.rel_q3_topk(),
-        "kg_richclub": O.kg_richclub(),
-        "rel_trend": O.rel_trend(),
-        "rel_scd2": O.rel_scd2(),
-        "txt_cosine_pairs": O.txt_cosine_pairs(),
-        "txt_redirect_chains": O.txt_redirect_chains(),
-        "txt_rank_fusion": O.txt_rank_fusion(),
-        "ann_hard_negatives": O.ann_hard_negatives(),
-        "rel_late_events": O.rel_late_events(),
-        "rel_corr_pairs": O.rel_corr_pairs(),
-        "rel_value_deciles": O.rel_value_deciles(),
-        "txt_heaps_growth": O.txt_heaps_growth(),
-        "txt_canonical_conflicts": O.txt_canonical_conflicts(),
-        "rel_interarrival": O.rel_interarrival(),
-        "txt_token_entropy": O.txt_token_entropy(),
-        "rel_weekday_profile": O.rel_weekday_profile(),
-        "rel_gap_fill": O.rel_gap_fill(GAP_FILL_MOD, GAP_FILL_REM),
-        "rel_sequence_patterns": O.rel_sequence_patterns(SEQ_MOD, SEQ_REM),
-        "kg_temporal_paths": O.kg_temporal_paths(),
-        "txt_shard_ring": O.txt_shard_ring(),
-        "rel_k_anonymity": O.rel_k_anonymity(),
-        "ann_nndescent": O.ann_nndescent(),
-        "mm_audio_match": O.mm_audio_match(),
-        "txt_boilerplate": O.txt_boilerplate(),
-        "er_geo_pairs": O.er_geo_pairs(),
-        "kg_conjunct_facts": O.kg_conjunct_facts(CONJ_MOD, CONJ_REM, CONJ_VERBS),
-        "rel_rate_anomaly": O.rel_rate_anomaly(),
-        "rel_fd_audit": O.rel_fd_audit(),
-        "rel_join_estimate": O.rel_join_estimate(),
-        "er_bcubed": O.er_bcubed(),
-        "txt_source_jaccard": O.txt_source_jaccard(),
-        "kg_shacl_card": O.kg_shacl_card(SHACL_SHAPES),
-        "rel_decay_score": O.rel_decay_score(),
-        "rel_attribution": O.rel_attribution(),
-        "rel_debounce": O.rel_debounce(),
-        "kg_louvain_move": O.kg_louvain_move(iterations=4),
-        "er_blocking_quality": O.er_blocking_quality(),
-        "kg_temporal_conflicts": O.kg_temporal_conflicts(
+        "rel_gap_fill": lambda: O.rel_gap_fill(GAP_FILL_MOD, GAP_FILL_REM),
+        "rel_sequence_patterns": lambda: O.rel_sequence_patterns(SEQ_MOD, SEQ_REM),
+        "kg_conjunct_facts": lambda: O.kg_conjunct_facts(CONJ_MOD, CONJ_REM, CONJ_VERBS),
+        "kg_shacl_card": lambda: O.kg_shacl_card(SHACL_SHAPES),
+        "kg_louvain_move": lambda: O.kg_louvain_move(iterations=4),
+        "kg_temporal_conflicts": lambda: O.kg_temporal_conflicts(
             day_mod=TEMPORAL_DAY_MOD,
         ),
-        "rel_histogram": O.rel_histogram(n_buckets=20),
-        "rel_q18_bigcust": O.rel_q18_bigcust(min_qty=250),
-        "ann_beam_search": O.ann_beam_search(),
-        "txt_span_corruption": O.txt_span_corruption(noise_pct=15),
-        "er_fs_patterns": O.er_fs_patterns(ratio=45),
-        "mm_caption_groups": O.mm_caption_groups(splice_mod=25),
-        "txt_curriculum": O.txt_curriculum(),
-        "rel_q4_priority": O.rel_q4_priority(late_days=90),
-        "rel_streaks": O.rel_streaks(),
-        "er_chain_audit": O.er_chain_audit(),
-        "ann_filtered_topk": O.ann_filtered_topk(),
-        "er_meta_blocking": O.er_meta_blocking(),
-        "rel_wow_change": O.rel_wow_change(),
-        "dedup_survivorship": O.dedup_survivorship(),
-        "kg_isa_polarity": O.kg_isa_polarity(
+        "rel_histogram": lambda: O.rel_histogram(n_buckets=20),
+        "rel_q18_bigcust": lambda: O.rel_q18_bigcust(min_qty=250),
+        "txt_span_corruption": lambda: O.txt_span_corruption(noise_pct=15),
+        "er_fs_patterns": lambda: O.er_fs_patterns(ratio=45),
+        "mm_caption_groups": lambda: O.mm_caption_groups(splice_mod=25),
+        "rel_q4_priority": lambda: O.rel_q4_priority(late_days=90),
+        "kg_isa_polarity": lambda: O.kg_isa_polarity(
             HEARST_MOD, HEARST_HYPO, HEARST_HYPER, HEARST_HYPER2
         ),
-        "kg_property_coverage": O.kg_property_coverage(),
-        "rel_salted_join": O.rel_salted_join(),
-        "kg_ifp_merge": O.kg_ifp_merge(),
-        "rel_benford": O.rel_benford(),
-        "ann_mmr_rerank": O.ann_mmr_rerank(),
-        "dedup_lsh_curve": O.dedup_lsh_curve(),
-        "er_fs_em_round": O.er_fs_em_round(ratio=45),
-        "txt_instruction_density": O.txt_instruction_density(),
-        "kg_entity_sentiment": O.kg_entity_sentiment(SENTIMENT_NAMES),
-        "rel_hopping_window": O.rel_hopping_window(width_days=7),
-        "txt_collocation_llr": O.txt_collocation_llr(),
-        "txt_zipf_slope": O.txt_zipf_slope(),
-        "txt_burstiness": O.txt_burstiness(),
-        "kg_tag_transitions": O.kg_tag_transitions(),
-        "dedup_lsh_stats": O.dedup_lsh_stats(max_bucket=2),
-        "kg_negative_samples": O.kg_negative_samples(),
-        "kg_entity_contexts": O.kg_entity_contexts(),
-        "kg_entity_trends": O.kg_entity_trends(),
-        "er_cluster_stats": O.er_cluster_stats(),
-        "kg_ensemble_mentions": O.kg_ensemble_mentions(),
-        "kg_ensemble_mentions_prod": O.kg_ensemble_mentions(),
-        "kg_ensemble_v1_tags": O.kg_ensemble_v1_tags(),
-        "kg_ensemble_reconciled": O.kg_ensemble_reconciled(),
-        "txt_stats": O.txt_stats(),
-        "txt_quality": O.txt_quality(),
-        "txt_langid": O.txt_langid(),
-        "txt_fingerprint": O.txt_fingerprint(),
-        "txt_repetition": O.txt_repetition(),
-        "txt_contamination": O.txt_contamination(),
-        "txt_source_stats": O.txt_source_stats(),
-        "txt_redact": O.txt_redact(),
-        "txt_line_dedup": O.txt_line_dedup(),
-        "txt_unigram_stats": O.txt_unigram_stats(),
-        "txt_length_pct": O.txt_length_pct(),
-        "txt_hll_registers": O.txt_hll_registers(),
-        "txt_cms_counters": O.txt_cms_counters(),
-        "txt_bloom_vocab": O.txt_bloom_vocab(),
-        "txt_tfidf": O.txt_tfidf(),
-        "kg_common_neighbors": O.kg_common_neighbors(),
-        "txt_sample_hash": O.txt_sample_hash(),
-        "txt_sample_balanced": O.txt_sample_balanced(),
-        "txt_split_assign": O.txt_split_assign(),
-        "txt_split_leakage": O.txt_split_leakage(),
-        "txt_postings": O.txt_postings(),
-        "txt_length_hist": O.txt_length_hist(),
-        "txt_bigram_lm": O.txt_bigram_lm(),
-        "txt_mix_sqrt": O.txt_mix_sqrt(),
-        "txt_fertility": O.txt_fertility(),
-        "txt_curated_manifest": O.txt_curated_manifest(),
-        "txt_pack_sequences": O.txt_pack_sequences(),
-        "txt_pack_manifest": O.txt_pack_manifest(),
-        "txt_chunks": O.txt_chunks(),
-        "txt_bigram_novelty": O.txt_bigram_novelty(),
-        "txt_mix_plan": O.txt_mix_plan(),
-        "dedup_incremental": O.dedup_incremental(DEDUP_INGEST_SPLIT),
-        "dedup_snapshot_diff": O.dedup_snapshot_diff(SNAPDIFF_OLD, SNAPDIFF_NEW_FROM, SNAPDIFF_MUT),
-        "txt_lang_mix": O.txt_lang_mix(LANG_MIX_MOD),
-        "txt_links": O.txt_links(),
-        "txt_anchor_texts": O.txt_anchor_texts(),
-        "txt_canonical": O.txt_canonical(),
-        "txt_host_rank": O.txt_host_rank(),
-        "txt_host_hits": O.txt_host_hits(),
-        "dedup_canonical": O.dedup_canonical(),
-        "txt_host_graph": O.txt_host_graph(),
-        "kg_entity_provenance": O.kg_entity_provenance(),
-        "txt_domain_quality": O.txt_domain_quality(),
-        "kg_entity_ambiguity": O.kg_entity_ambiguity(),
-        "kg_type_matrix": O.kg_type_matrix(),
-        "kg_triple_diff": O.kg_triple_diff(),
-        "kg_entity_salience": O.kg_entity_salience(),
-        "kg_doc_yield": O.kg_doc_yield(),
-        "txt_url_parse": O.txt_url_parse(),
-        "txt_domain_stats": O.txt_domain_stats(URL_BLOCKLIST),
-        "txt_line_filter": O.txt_line_filter(),
-        "txt_html_strip": O.txt_html_strip(),
-        "txt_encoding": O.txt_encoding(),
-        "txt_pack_stats": O.txt_pack_stats(),
-        "kg_predicate_pairs": O.kg_predicate_pairs(),
-        "dedup_exact": O.dedup_exact(),
-        "dedup_jaccard": O.dedup_jaccard(),
-        "dedup_jaccard_exact": O.dedup_jaccard_exact(),
-        "dedup_minhash_lsh": O.dedup_minhash_lsh(),
-        "dedup_clusters": O.dedup_clusters(),
-        "dedup_simhash": O.dedup_simhash(),
-        "dedup_simhash_pairs": O.dedup_simhash_pairs(),
-        "dedup_embedding_cosine": O.dedup_embedding_cosine(),
-        "ann_bruteforce": O.ann_bruteforce(),
-        "ann_ivf_assign": O.ann_ivf_assign(),
-        "ann_ivf_topk": O.ann_ivf_topk(),
-        "ann_ivf_topk_probe": O.ann_ivf_topk_probe(),
-        "ann_range_search": O.ann_range_search(),
-        "ann_pq_codes": O.ann_pq_codes(),
-        "ann_ivfpq_topk": O.ann_ivfpq_topk(),
-        "mm_media_meta": O.mm_media_meta(),
-        "mm_ahash": O.mm_ahash(),
-        "mm_ahash_groups": O.mm_ahash_groups(),
-        "kg_ppr": O.kg_ppr(),
-        "dedup_winnowing": O.dedup_winnowing(),
-        "kg_schema_violations": O.kg_schema_violations(),
-        "txt_kmv_registers": O.txt_kmv_registers(),
-        "dedup_containment": O.dedup_containment(),
-        "rel_semi_anti": O.rel_semi_anti(),
-        "txt_bpe_merge2": O.txt_bpe_merge2(),
-        "kg_walks2": O.kg_walks2(),
-        "rel_unpivot": O.rel_unpivot(),
-        "ann_recall": O.ann_recall(),
-        "dedup_lsh_quality": O.dedup_lsh_quality(),
-        "mm_frames": O.mm_frames(),
-        "mm_thumbnail": O.mm_thumbnail(),
-        "er_exact_canonical": O.er_exact_canonical(),
-        "er_components": O.er_components(),
-        "er_entity_aliases": O.er_entity_aliases(),
-        "kg_entity_cards": O.kg_entity_cards(),
-        "er_entity_linking": O.er_entity_linking(),
-        "kg_triples_temporal": O.kg_triples_temporal(),
-        "ann_srp_lsh": O.ann_srp_lsh(),
-        "kg_canonical_triples": O.kg_canonical_triples(),
-        "kg_triple_support": O.kg_triple_support(),
-        "kg_ntriples": O.kg_ntriples(),
-        "kg_triangles": O.kg_triangles(),
-        "rel_agg_scan": """
+        "er_fs_em_round": lambda: O.er_fs_em_round(ratio=45),
+        "kg_entity_sentiment": lambda: O.kg_entity_sentiment(SENTIMENT_NAMES),
+        "rel_hopping_window": lambda: O.rel_hopping_window(width_days=7),
+        "dedup_lsh_stats": lambda: O.dedup_lsh_stats(max_bucket=2),
+        "kg_ensemble_mentions_prod": lambda: O.kg_ensemble_mentions(),
+        "dedup_incremental": lambda: O.dedup_incremental(DEDUP_INGEST_SPLIT),
+        "dedup_snapshot_diff": lambda: O.dedup_snapshot_diff(SNAPDIFF_OLD, SNAPDIFF_NEW_FROM, SNAPDIFF_MUT),
+        "txt_lang_mix": lambda: O.txt_lang_mix(LANG_MIX_MOD),
+        "txt_domain_stats": lambda: O.txt_domain_stats(URL_BLOCKLIST),
+        "rel_agg_scan": lambda: """
             SELECT l_returnflag, l_linestatus,
                    CAST(sum(l_quantity) AS BIGINT) AS sum_qty,
                    count(*) AS n_rows,
@@ -6576,7 +6017,7 @@ def oracle_sql() -> dict[str, str]:
             WHERE l_shipdate < TIMESTAMP '1998-01-01'
             GROUP BY l_returnflag, l_linestatus
         """,
-        "rel_join_topk": """
+        "rel_join_topk": lambda: """
             SELECT c_mktsegment, CAST(rank AS BIGINT) AS rank, o_orderkey
             FROM (
                 SELECT c.c_mktsegment, o.o_orderkey,
@@ -6585,7 +6026,7 @@ def oracle_sql() -> dict[str, str]:
                 FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
             ) WHERE rank <= 3
         """,
-        "rel_window_sessions": """
+        "rel_window_sessions": lambda: """
             WITH g AS (
                 SELECT user_id,
                        CASE WHEN epoch(ts) - lag(epoch(ts)) OVER w IS NULL
@@ -6598,7 +6039,7 @@ def oracle_sql() -> dict[str, str]:
                    count(*) AS n_events
             FROM g GROUP BY user_id
         """,
-        "rel_asof_join": """
+        "rel_asof_join": lambda: """
             WITH ev AS (
                 SELECT event_id, ts, user_id,
                        CASE WHEN event_type = 'view' THEN 0 ELSE 1 END AS side
@@ -6622,55 +6063,26 @@ def oracle_sql() -> dict[str, str]:
                    CAST(date_diff('microsecond', view_ts, ts) AS BIGINT) AS gap_us
             FROM x WHERE side = 1
         """,
-        "rel_set_union": """
+        "rel_set_union": lambda: """
             SELECT DISTINCT CAST(c_nationkey AS BIGINT) AS nationkey FROM customer
             UNION
             SELECT DISTINCT CAST(s_nationkey AS BIGINT) FROM supplier
         """,
-        "rel_rollup": """
+        "rel_rollup": lambda: """
             SELECT coalesce(event_type, 'ALL') AS event_type, count(*) AS n
             FROM events GROUP BY ROLLUP (event_type)
         """,
-        "rel_zorder": O.rel_zorder(),
-        "rel_compaction_plan": O.rel_compaction_plan(),
-        "rel_merge_upsert": O.rel_merge_upsert(),
-        "txt_hot_keys": O.txt_hot_keys(),
-        "txt_url_templates": O.txt_url_templates(),
-        "kg_tagger_agreement": O.kg_tagger_agreement(),
-        "kg_type_priors": O.kg_type_priors(),
         # full recompute — proves the engine's incremental merge exactly
-        "kg_cooccurrence_delta": O.kg_cooccurrence(),
-        "txt_warc_records": O.txt_warc_records(),
-        "txt_robots_check": O.txt_robots_check(),
-        "rel_snapshot_expiry": O.rel_snapshot_expiry(),
-        "mm_audio_windows": O.mm_audio_windows(),
-        "kg_bfs_dist": O.kg_bfs_dist(),
-        "kg_scc": O.kg_scc(),
-        "kg_sssp": O.kg_sssp(),
-        "kg_butterflies": O.kg_butterflies(),
-        "kg_msf": O.kg_msf(),
-        "kg_taxonomy_depth": O.kg_taxonomy_depth(
+        "kg_cooccurrence_delta": lambda: O.kg_cooccurrence(),
+        "kg_taxonomy_depth": lambda: O.kg_taxonomy_depth(
             HEARST_MOD, HEARST_HYPO, HEARST_HYPER, HEARST_HYPER2
         ),
-        "txt_bm25": O.txt_bm25(),
-        "dedup_ppjoin": O.dedup_ppjoin(),
-        "kg_condensation": O.kg_condensation(),
-        "kg_bowtie": O.kg_bowtie(),
-        "kg_rpq": O.kg_rpq(),
-        "kg_simrank": O.kg_simrank(),
-        "kg_entity_facts": O.kg_entity_facts(),
-        "kg_pra": O.kg_pra(),
-        "txt_rake": O.txt_rake(),
-        "kg_inferred_triples": O.kg_inferred_triples(),
-        "kg_truth_discovery": O.kg_truth_discovery(),
-        "kg_asof_snapshot": O.kg_asof_snapshot(ASOF_DAY),
-        "kg_quotations": O.kg_quotations(),
-        "rel_profile": O.rel_profile(),
+        "kg_asof_snapshot": lambda: O.kg_asof_snapshot(ASOF_DAY),
         # full fixpoint over ALL edges — proves incremental == recompute
-        "er_components_delta": O.er_components(),
-        "mm_video_scenes": O.mm_video_scenes(),
-        "rel_zone_map": O.rel_zone_map(*ZQ_BOX),
-        "kg_doc_cooccurrence": O.kg_doc_cooccurrence(),
-        "txt_vocab_coverage": O.txt_vocab_coverage(),
-        "er_anchor_aliases": O.er_anchor_aliases(),
+        "er_components_delta": lambda: O.er_components(),
+        "rel_zone_map": lambda: O.rel_zone_map(*ZQ_BOX),
+    }
+    return {
+        name: special[name]() if name in special else getattr(O, name)()
+        for name in queries()
     }

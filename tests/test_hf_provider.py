@@ -79,3 +79,26 @@ def test_tag_sentences_end_to_end_with_hf_provider(spark):
             assert m.prediction and isinstance(m.prediction, str)
         assert len(r.tags) == len(r.words)
         assert all(t == "O" or t[:2] in ("B_", "I_") for t in r.tags)
+
+
+def test_provider_factory_runs_once_per_worker(spark, tmp_path):
+    """tag_sentences builds one provider per worker process, not one per
+    task: two jobs of 8 tasks each construct it once in every worker pid."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from unsupervised_ner_spark.pipeline.tagging import tag_sentences
+    from unsupervised_ner_spark.testing.counting import CountingFixtureFactory
+
+    log = tmp_path / "constructions"
+    s = spark.range(0, 32, 1, 8).select(
+        F.col("id").cast("string").alias("url"),
+        F.col("id").cast("int").alias("sent_idx"),
+        F.lit("Imatinib treats leukemia . ").alias("sent"),
+    )
+    tagged = tag_sentences(s, provider_factory=CountingFixtureFactory(str(log)))
+    for _ in range(2):
+        tagged.write.format("noop").mode("overwrite").save()
+    per_pid = Counter(log.read_text().split())
+    assert per_pid and set(per_pid.values()) == {1}, per_pid

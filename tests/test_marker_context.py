@@ -103,6 +103,23 @@ def test_oov_descs_are_signature_misses():
         assert hits == [], f"OOV descs present in {model} signatures: {hits}"
 
 
+@pytest.mark.parametrize("model", ["a100", "bbc"])
+def test_worker_bundle_matches_its_sources(model):
+    """The pickle bundle a Spark worker types with must hold the parquet
+    fixture and the vendored term lists the kernel oracle reads: rerun
+    scripts/gen_fixtures.py after editing either."""
+    import pickle
+
+    from unsupervised_ner_spark.descriptors import FIXTURES_DIR
+
+    with open(FIXTURES_DIR / f"bundle_{model}.pkl", "rb") as fp:
+        bundle = pickle.load(fp)
+    assert bundle.keys() == {"table", "entity_map", "signatures"}
+    assert bundle["table"] == FixtureDescriptorProvider._load_parquet(model)
+    assert bundle["entity_map"] == dims.load_entity_map()
+    assert bundle["signatures"] == dims.load_signatures(model)
+
+
 def test_bare_marker_context_key_types_from_context(spark_typed):
     # "Parkinsons :__entity__": the bare-marker mention (empty surface) must
     # inherit a context-keyed type, not collapse to OTHER

@@ -6,6 +6,7 @@ import pytest
 
 from unsupervised_ner_spark import dims
 from unsupervised_ner_spark.descriptors import FixtureDescriptorProvider
+from unsupervised_ner_spark.kernel import spans as S
 from unsupervised_ner_spark.kernel.oracle import OracleTagger, add_term_punct
 from unsupervised_ner_spark.pipeline.runner import (
     masked_mentions_from_tagged,
@@ -154,9 +155,11 @@ def test_sql_mentions_agree_with_udf_path(spark, stages, oracle):
     }
     expected = {}
     for r in sentences.collect():
+        tokens = S.parse_tokens(r.sent)
         for i, m in enumerate(oracle.tag_sentence(r.sent).mentions):
             expected[(r.url, r.sent_idx, i)] = (
-                m.begin_tok, m.end_tok, m.surface, m.masked_sentence, m.ci_probe,
+                m.begin_tok, m.end_tok, m.surface,
+                S.masked_sentence(tokens, m), S.ci_probe(m.surface),
             )
     assert sum(k[0] == "marker" for k in expected) == 8
     assert "Мезотелиома is a entity" in {v[4] for v in expected.values()}

@@ -2,6 +2,8 @@
 tagging): degenerate and extreme inputs must not throw under either tagged
 schema, and every tagged row must equal the single-process kernel's."""
 
+import tracemalloc
+
 import pyarrow as pa
 import pytest
 from hypothesis import example, given, settings
@@ -119,6 +121,21 @@ def arrow_nbytes(df) -> int:
         "n long",
     )
     return sum(r.n for r in sizes.collect())
+
+
+def test_dense_sentence_kernel_peak_stays_small(oracle):
+    """The kernel builds a mention's CS mask and CI probe only on a typing
+    memo miss and keeps neither, so tagging the dense sentence allocates
+    with its tokens and mentions, not mentions x sentence length (~190 MB
+    when every mention kept its mask)."""
+    tracemalloc.start()
+    try:
+        r = oracle.tag_sentence(DENSE_SENT)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert len(r.mentions) == 3401
+    assert peak < 16 * 2**20
 
 
 def test_dense_sentence_row_stays_small(spark):

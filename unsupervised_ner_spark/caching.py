@@ -64,11 +64,7 @@ def _register(df: DataFrame, release: Callable[[DataFrame], None]) -> None:
         scopes[-1].append((df, release))
 
 
-def scoped_persist(
-    df: DataFrame,
-    level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-    how: str = "persist",
-) -> DataFrame:
+def scoped_persist(df: DataFrame, how: str = "persist") -> DataFrame:
     """Persist ``df`` and hand ownership to the active cache scope (if any).
 
     ``how``: "persist" (columnar SQL cache — pays an encode cost, releasable
@@ -83,36 +79,26 @@ def scoped_persist(
         df = df.localCheckpoint(eager=False)
         _register(df, _release_checkpoint)
         return df
-    df = df.persist(level)
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
     _register(df, _release_persist)
     return df
 
 
 @contextmanager
 def cache_scope():
-    """Releases every ``scoped_persist`` handle registered inside on exit.
-
-    Yields the (mutable) handle list so callers can register extra handles
-    as ``(df, release_fn)`` pairs (e.g. a ``.persist()`` taken directly in
-    query code paired with ``DataFrame.unpersist``)."""
+    """Releases every ``scoped_persist`` handle registered inside on exit."""
     scopes = getattr(_LOCAL, "scopes", None)
     if scopes is None:
         scopes = _LOCAL.scopes = []
     handles: list[tuple[DataFrame, Callable[[DataFrame], None]]] = []
     scopes.append(handles)
     try:
-        yield handles
+        yield
     finally:
         scopes.pop()
-        for h in reversed(handles):
+        for df, release in reversed(handles):
             try:
-                # documented extension point: callers may append either a
-                # (df, release_fn) pair or a bare persisted DataFrame
-                if isinstance(h, tuple):
-                    df, release = h
-                    release(df)
-                else:
-                    h.unpersist(blocking=False)
+                release(df)
             except Exception:
                 # best-effort cleanup: a released SparkContext / already
                 # -freed handle must not mask the caller's own exception

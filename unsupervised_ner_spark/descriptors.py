@@ -128,7 +128,10 @@ class FixtureDescriptorProvider:
 
         A bare-marker mention keys only its CS side on the context word; its
         CI probe has no mask and is always OOV. Its key is therefore kept
-        apart from a surface-keyed mention whose head is the same word."""
+        apart from a surface-keyed mention whose head is the same word.
+        The kernel passes ``context`` (the CS masked sentence) only for such
+        an empty-surface mention, so a provider whose key would read the
+        context of any other mention must return None."""
         key = self._key(surface, context)
         return key if surface.split() else "\x00ctx" + key
 

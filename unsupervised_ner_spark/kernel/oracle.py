@@ -10,7 +10,7 @@ golden oracle the distributed Spark pipeline must match token-for-token
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from unsupervised_ner_spark.kernel import spans as S
 from unsupervised_ner_spark.kernel import typing as T
@@ -31,22 +31,16 @@ class MentionResult:
     begin_tok: int
     end_tok: int
     surface: str
-    masked_sentence: str
-    ci_probe: str
-    ci_entities: list[str] = field(default_factory=list)
-    ci_confidences: list[float] = field(default_factory=list)
-    cs_entities: list[str] = field(default_factory=list)
-    cs_confidences: list[float] = field(default_factory=list)
-    pooled: list = field(default_factory=list)
-    prediction: str = "OTHER"
+    pooled: list
+    prediction: str
     # packed per-side distributions (pack_confidences,
     # batched_main_NER.py:396-413) — the orig_cs/orig_ci_prediction_details
     # payloads the ensemble consumes
-    cs_dist: list = field(default_factory=list)
-    ci_dist: list = field(default_factory=list)
+    cs_dist: list
+    ci_dist: list
     # raw descriptor term lists (cs/ci_prediction_details "descs" payload)
-    cs_descs: list = field(default_factory=list)
-    ci_descs: list = field(default_factory=list)
+    cs_descs: list
+    ci_descs: list
 
 
 @dataclass
@@ -91,6 +85,30 @@ class OracleTagger:
         sigs = [self._signature(d) for d, _ in descs]
         return T.aggregate_entities(descs, sigs, self.entity_map, self.suppress_untagged)
 
+    def _type_mention(self, surface: str, masked: str, blank: bool) -> tuple:
+        """Descriptor fetch, typing and pooling of one mention: the
+        MentionResult fields after its span, in order."""
+        ci_descs = self.provider.descriptors(surface, "ci", context=S.ci_probe(surface))
+        cs_descs = self.provider.descriptors(surface, "cs", context=masked)
+        ci_entities, ci_confidences, ci_subtypes = self._type_side(ci_descs)
+        if cs_descs:
+            cs_entities, cs_confidences, cs_subtypes = self._type_side(cs_descs)
+        else:  # find_cs_entities empty-descs branch (batched_main_NER.py:436-441)
+            cs_entities, cs_confidences, cs_subtypes = [], [], {}
+        pooled = T.pool_confidences(
+            ci_entities, ci_confidences, ci_subtypes,
+            cs_entities, cs_confidences, cs_subtypes,
+            blank_probe=blank,
+        )
+        return (
+            pooled,
+            T.top_prediction(pooled),
+            T.pack_confidences(cs_entities, cs_confidences),
+            T.pack_confidences(ci_entities, ci_confidences),
+            [d for d, _ in cs_descs],
+            [d for d, _ in ci_descs],
+        )
+
     def tag_sentence(self, text: str) -> SentenceResult:
         sent = add_term_punct(text) if self.punct_terminate else text
         tokens = S.parse_tokens(sent)
@@ -102,52 +120,20 @@ class OracleTagger:
                 span_arr[i] = 1
         blank = S.is_blank_probe(sent)
         results: list[MentionResult] = []
-        predictions: list[str] = []
         cache_key_fn = getattr(self.provider, "cache_key", lambda s, context=None: None)
         for m in mentions:
-            mr = MentionResult(
-                begin_tok=m.begin_tok,
-                end_tok=m.end_tok,
-                surface=m.surface,
-                masked_sentence=S.masked_sentence(tokens, m),
-                ci_probe=S.ci_probe(m.surface),
-            )
-            ck = cache_key_fn(m.surface, context=mr.masked_sentence)
+            # the CS mask is built up front only for a bare marker (empty
+            # surface), the one mention whose cache key reads its context
+            masked = None if m.surface.split() else S.masked_sentence(tokens, m)
+            ck = cache_key_fn(m.surface, context=masked)
             memo_key = (ck, blank) if ck is not None else None
-            hit = self._memo.get(memo_key) if memo_key is not None else None
-            if hit is not None:
-                (mr.ci_entities, mr.ci_confidences, mr.cs_entities,
-                 mr.cs_confidences, mr.pooled, mr.prediction,
-                 mr.cs_dist, mr.ci_dist, mr.cs_descs, mr.ci_descs) = hit
-            else:
-                ci_descs = self.provider.descriptors(
-                    m.surface, "ci", context=mr.ci_probe
-                )
-                cs_descs = self.provider.descriptors(
-                    m.surface, "cs", context=mr.masked_sentence
-                )
-                mr.ci_entities, mr.ci_confidences, ci_subtypes = self._type_side(ci_descs)
-                if cs_descs:
-                    mr.cs_entities, mr.cs_confidences, cs_subtypes = self._type_side(cs_descs)
-                else:  # find_cs_entities empty-descs branch (batched_main_NER.py:436-441)
-                    cs_subtypes = {}
-                mr.pooled = T.pool_confidences(
-                    mr.ci_entities, mr.ci_confidences, ci_subtypes,
-                    mr.cs_entities, mr.cs_confidences, cs_subtypes,
-                    blank_probe=blank,
-                )
-                mr.prediction = T.top_prediction(mr.pooled)
-                mr.cs_dist = T.pack_confidences(mr.cs_entities, mr.cs_confidences)
-                mr.ci_dist = T.pack_confidences(mr.ci_entities, mr.ci_confidences)
-                mr.cs_descs = [d for d, _ in cs_descs]
-                mr.ci_descs = [d for d, _ in ci_descs]
+            typed = self._memo.get(memo_key) if memo_key is not None else None
+            if typed is None:
+                if masked is None:
+                    masked = S.masked_sentence(tokens, m)
+                typed = self._type_mention(m.surface, masked, blank)
                 if memo_key is not None:
-                    self._memo[memo_key] = (
-                        mr.ci_entities, mr.ci_confidences, mr.cs_entities,
-                        mr.cs_confidences, mr.pooled, mr.prediction,
-                        mr.cs_dist, mr.ci_dist, mr.cs_descs, mr.ci_descs,
-                    )
-            results.append(mr)
-            predictions.append(mr.prediction)
-        tags = emit_bio(span_arr, predictions)
+                    self._memo[memo_key] = typed
+            results.append(MentionResult(m.begin_tok, m.end_tok, m.surface, *typed))
+        tags = emit_bio(span_arr, [r.prediction for r in results])
         return SentenceResult(sent, words, span_arr, results, tags)

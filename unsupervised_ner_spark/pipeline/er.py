@@ -9,11 +9,11 @@ Stages:
    the normalized surface, band self-join (bucket-capped against hot-key
    blowup, e.g. "covid" appearing in millions of pages), exact Jaccard
    verify >= threshold.
-4. ``connected_components``— iterative min-label propagation over the edge
-   set (large-star/small-star style alternation is unnecessary at these
-   densities; plain neighbor-min converges in O(diameter) rounds). Each
-   iteration localCheckpoints to cut lineage; iteration count is logged —
-   deterministic and resumable.
+4. ``connected_components_star`` — alternating large-star/small-star
+   connected components, O(log n) rounds whatever the graph diameter; each
+   round localCheckpoints to cut lineage. ``connected_components`` (plain
+   min-label propagation, O(diameter) rounds) is the tests' reference; both
+   return component minima.
 5. ``canonical_entities``/``canonicalize_triples`` — final graph tables.
 
 Skew note: the band join salts implicitly through banding (a hot surface
@@ -215,35 +215,18 @@ def _sym_persist(edges: DataFrame) -> DataFrame:
 
 
 def connected_components(
-    nodes: DataFrame, edges: DataFrame, max_iter: int = 20, loop_partitions: int | None = None
+    nodes: DataFrame, edges: DataFrame, max_iter: int = 20
 ) -> tuple[DataFrame, int]:
     """Min-label propagation: returns (node_id -> component_id, iterations).
+    The tests' reference for ``connected_components_star``.
 
     Driver-side loop over DataFrames; each round localCheckpoints so lineage
     stays bounded (SURVEY.md §4.3 item 3). Deterministic: labels are md5
-    strings, min is total order.
-
-    ``loop_partitions`` sizes the per-iteration shuffles: iteration state is
-    usually tiny relative to the corpus (unique surfaces, not mentions), and
-    per-task overhead dominates if the loop inherits the corpus-sized
-    shuffle-partition setting. Default (None): sized from the materialized
-    edge count — ~1 partition per 100k symmetric edges, clamped to
-    [4, 4 × defaultParallelism] — so the loop stays parallel when the
-    surface graph is 100 TB-sized but cheap when it is tiny."""
+    strings, min is total order."""
     labels = nodes.select("node_id", F.col("node_id").alias("component"))
     sym = edges.select("node_a", "node_b").union(
         edges.select(F.col("node_b").alias("node_a"), F.col("node_a").alias("node_b"))
-    )
-    # checkpoint FIRST (cuts the expensive LSH lineage), then count the now-
-    # materialized edges to size the loop — the count is a cheap scan of the
-    # checkpointed blocks, not a recompute.
-    sym = sym.localCheckpoint()
-    if loop_partitions is None:
-        n_edges = sym.count()
-        max_par = 4 * sym.sparkSession.sparkContext.defaultParallelism
-        loop_partitions = min(max(4, -(-n_edges // 100_000)), max_par)
-    sym = sym.repartition(loop_partitions, "node_b").localCheckpoint()
-    labels = labels.repartition(loop_partitions, "node_id")
+    ).localCheckpoint()
     iterations = 0
     for _ in range(max_iter):
         iterations += 1

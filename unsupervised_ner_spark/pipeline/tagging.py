@@ -100,25 +100,24 @@ TAGGED_SCHEMA_SLIM = _tagged_schema(MENTION_SLIM)
 _WORKER_TAGGER_CACHE: dict = {}
 
 
-def _worker_tagger(model: str) -> OracleTagger:
-    if model not in _WORKER_TAGGER_CACHE:
-        import pickle
-
-        from unsupervised_ner_spark.descriptors import FIXTURES_DIR
-
-        bundle_path = FIXTURES_DIR / f"bundle_{model}.pkl"
-        if bundle_path.exists():  # fast cold start (see gen_fixtures.py)
-            with open(bundle_path, "rb") as fp:
-                b = pickle.load(fp)
-            provider = FixtureDescriptorProvider(b["table"])
-            emap, sigs = b["entity_map"], b["signatures"]
-        else:
-            provider = FixtureDescriptorProvider.load(model)
-            emap, sigs = dims.load_entity_map(), dims.load_signatures(model)
-        _WORKER_TAGGER_CACHE[model] = OracleTagger(
-            provider, emap, sigs, punct_terminate=False
+def _worker_tagger(model: str, provider_factory: Callable[[], object] | None) -> OracleTagger:
+    """One tagger per worker process and model, rebuilt when the provider
+    factory changes. Each task unpickles its own copy of the factory, so a
+    tagger outlives its task only for a factory that compares equal to its
+    copies: a module-level function or class (pickled by reference) or a
+    frozen dataclass instance. Any other factory runs once per task, and
+    the tagger it replaces is dropped."""
+    cached = _WORKER_TAGGER_CACHE.get(model)
+    if cached is None or cached[0] != provider_factory:
+        provider = (
+            provider_factory() if provider_factory is not None
+            else FixtureDescriptorProvider.load(model)
         )
-    return _WORKER_TAGGER_CACHE[model]
+        cached = _WORKER_TAGGER_CACHE[model] = (provider_factory, OracleTagger(
+            provider, dims.load_entity_map(), dims.load_signatures(model),
+            punct_terminate=False,
+        ))
+    return cached[1]
 
 
 def _list_array(offsets: list[int], child: pa.Array) -> pa.ListArray:
@@ -149,6 +148,8 @@ def tag_sentences(
     the in-UDF tagger runs with punct_terminate=False (idempotence) and
     ``sent`` passes through unchanged, like ``url`` and ``sent_idx``.
     ``conf`` is the top pooled confidence (1.0 when nothing is pooled).
+    ``provider_factory`` (None: the model's fixture provider) runs once per
+    worker process; ``_worker_tagger`` says which factories qualify.
 
     Per Arrow batch the kernel's results are appended to flat per-batch
     lists (one per leaf field) next to int32 offset lists, and every list
@@ -161,15 +162,7 @@ def tag_sentences(
         dist_t = mention_t.field("cs_dist").type.value_type
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        if provider_factory is not None:
-            tagger = OracleTagger(
-                provider_factory(),
-                dims.load_entity_map(),
-                dims.load_signatures(model),
-                punct_terminate=False,
-            )
-        else:
-            tagger = _worker_tagger(model)
+        tagger = _worker_tagger(model, provider_factory)
         for batch in batches:
             # words and tags are token-aligned: one offset list
             words, tags, tok_off = [], [], [0]
