@@ -1835,12 +1835,7 @@ def main() -> None:
     from unsupervised_ner_spark.ops.curation import coverage_round_top1
     from unsupervised_ner_spark.pipeline import er as _er
 
-    _typed = entry._typed_production(spark, SF)
-    _occ = _er.entity_occurrences(
-        _typed.select("url", "sent_idx", "mention_idx", "surface",
-                      "pred_group")
-    )
-    _pairs = _occ.select(
+    _pairs = entry._occurrences_production(spark, SF).select(
         "url", F.concat_ws("|", "norm_surface", "etype").alias("ent")
     ).distinct()
     p173 = plan_of(coverage_round_top1(_pairs))

@@ -114,28 +114,6 @@ def build_entity_map() -> pa.Table:
     )
 
 
-def build_pickle_bundles() -> None:
-    """Worker-fast-path bundles: the parquet fixtures re-serialized as
-    pickles (protocol 5). Cold worker init drops from ~2.3s (parquet ->
-    to_pylist -> dicts) to ~0.3s (C unpickler) — measured; at local[32]
-    that's the difference between a 60s and a 5s warmup storm."""
-    import pickle
-
-    from unsupervised_ner_spark import dims
-    from unsupervised_ner_spark.descriptors import FixtureDescriptorProvider
-
-    for model in ("a100", "bbc"):
-        table = FixtureDescriptorProvider._load_parquet(model)
-        bundle = {
-            "table": table,
-            "entity_map": dims.load_entity_map(),
-            "signatures": dims.load_signatures(model),
-        }
-        with open(OUT / f"bundle_{model}.pkl", "wb") as fp:
-            pickle.dump(bundle, fp, protocol=5)
-        print(f"wrote bundle_{model}.pkl")
-
-
 def main() -> None:
     OUT.mkdir(parents=True, exist_ok=True)
     for model in ("a100", "bbc"):
@@ -144,7 +122,6 @@ def main() -> None:
         print(f"wrote fixtures for {model}")
     pq.write_table(build_entity_map(), OUT / "entity_map.parquet")
     print("wrote entity_map")
-    build_pickle_bundles()
 
 
 if __name__ == "__main__":

@@ -16,7 +16,7 @@ This file is the application; the engine ships alongside it:
         --output s3://…/kg_out --lang en [--resume]
 
 Code imports from the zip (zipimport); dimension data (signature vocabs,
-descriptor fixtures, pickle bundles — things neither Python ``open()`` nor
+descriptor-fixture parquets — things neither Python ``open()`` nor
 the JVM parquet reader can use through a zip) ships as an ``--archives``
 bundle, extracted per-executor and located via ``UNSUPERVISED_NER_RESOURCES``
 (see ``unsupervised_ner_spark/respath.py``). This mirrors how model weights
@@ -102,10 +102,7 @@ def main() -> None:
     with cache_scope():
         typed_all = ckpt.stage_read(spark, root, "typed_mentions")
         triples_all = scoped_persist(ckpt.stage_read(spark, root, "page_triples"))
-        occ = er.entity_occurrences(
-            typed_all.select("url", "sent_idx", "mention_idx", "surface", "pred_group")
-        )
-        entities, membership = er.resolve_entities(occ)
+        entities, membership = er.resolve_entities(er.entity_occurrences(typed_all))
         canon = er.canonicalize_triples(triples_all, membership)
         entities.write.mode("overwrite").parquet(f"{root}/entities")
         canon.write.mode("overwrite").parquet(f"{root}/canonical_triples")

@@ -105,7 +105,7 @@ def test_checkpoint_commit_protocol(spark, pages, tmp_path):
     assert cp.stage_metrics(spark, root).select("wtoken").distinct().count() == 1
     # simulate a crash between data write and lineage commit: write data
     # files with a token that never gets a lineage row -> invisible
-    orphan = cp.with_bucket(df, "url", 64).withColumn("wtoken", F.lit("crashed"))
+    orphan = cp.with_bucket(df).withColumn("wtoken", F.lit("crashed"))
     orphan.write.mode("append").partitionBy("pbucket", "wtoken").parquet(f"{root}/s")
     assert cp.stage_read(spark, root, "s").count() == n
     # a successful second epoch becomes visible

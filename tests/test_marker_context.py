@@ -11,6 +11,8 @@ Legs compared per mention: (1) the single-process kernel (OracleTagger),
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
@@ -105,19 +107,24 @@ def test_oov_descs_are_signature_misses():
 
 @pytest.mark.parametrize("model", ["a100", "bbc"])
 def test_worker_bundle_matches_its_sources(model):
-    """The pickle bundle a Spark worker types with must hold the parquet
-    fixture and the vendored term lists the kernel oracle reads: rerun
-    scripts/gen_fixtures.py after editing either."""
-    import pickle
+    """The committed fixture parquets the tagging workers, the kernel
+    oracle and the DuckDB twins read must be what scripts/gen_fixtures.py
+    builds from the vendored term lists: rerun it after editing them."""
+    import sys
+
+    import pyarrow.parquet as pq
 
     from unsupervised_ner_spark.descriptors import FIXTURES_DIR
 
-    with open(FIXTURES_DIR / f"bundle_{model}.pkl", "rb") as fp:
-        bundle = pickle.load(fp)
-    assert bundle.keys() == {"table", "entity_map", "signatures"}
-    assert bundle["table"] == FixtureDescriptorProvider._load_parquet(model)
-    assert bundle["entity_map"] == dims.load_entity_map()
-    assert bundle["signatures"] == dims.load_signatures(model)
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "scripts"))
+    import gen_fixtures
+
+    for name, built in [
+        (f"descriptor_fixture_{model}", gen_fixtures.build_descriptor_fixture(model)),
+        (f"entity_signatures_{model}", gen_fixtures.build_signature_table(model)),
+        ("entity_map", gen_fixtures.build_entity_map()),
+    ]:
+        assert pq.read_table(FIXTURES_DIR / f"{name}.parquet").equals(built), name
 
 
 def test_bare_marker_context_key_types_from_context(spark_typed):

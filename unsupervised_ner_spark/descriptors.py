@@ -21,7 +21,8 @@ pluggable:
 
 from __future__ import annotations
 
-from pathlib import Path
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 from unsupervised_ner_spark.kernel.constants import (
     DUMMY_DESC_TERM,
@@ -56,37 +57,28 @@ def head_term(surface: str) -> str:
 class FixtureDescriptorProvider:
     """Deterministic descriptor lookup from the generated fixture table.
 
-    ``table``: dict term -> {"ci": [(desc, score)...], "cs": [...]}.
+    ``table``: the ``descriptor_fixture_{model}.parquet`` Arrow table
+    (term, ci_descs, cs_descs). Only the term -> row index is Python
+    objects; a row's ``[(desc, score), ...]`` list is built when
+    ``descriptors`` asks for it, which the kernel does on a typing-memo
+    miss only.
     """
 
-    def __init__(self, table: dict[str, dict[str, list[tuple[str, float]]]]):
-        self.table = table
-
-    @classmethod
-    def _load_parquet(cls, model: str) -> dict:
-        import pyarrow.parquet as pq
-
-        path = FIXTURES_DIR / f"descriptor_fixture_{model}.parquet"
-        t = pq.read_table(path).to_pylist()
-        return {
-            row["term"]: {
-                "ci": [(d["desc"], d["score"]) for d in row["ci_descs"]],
-                "cs": [(d["desc"], d["score"]) for d in row["cs_descs"]],
-            }
-            for row in t
+    def __init__(self, table: pa.Table):
+        self._row = {t: i for i, t in enumerate(table.column("term").to_pylist())}
+        self._sides = {
+            side: table.column(f"{side}_descs").combine_chunks()
+            for side in ("ci", "cs")
         }
 
     @classmethod
     def load(cls, model: str = "a100") -> "FixtureDescriptorProvider":
-        """Fast path: the committed pickle bundle (cold-start-critical for
-        executor workers); fallback: rebuild from the parquet fixture."""
-        import pickle
-
-        bundle = FIXTURES_DIR / f"bundle_{model}.pkl"
-        if bundle.exists():
-            with open(bundle, "rb") as fp:
-                return cls(pickle.load(fp)["table"])
-        return cls(cls._load_parquet(model))
+        """The committed parquet fixture: the one form of this data that
+        the tagging workers, the kernel oracle and the DuckDB twins read.
+        ``ParquetFile.read`` skips the dataset layer, whose first use
+        imports pandas (~0.3 s in a cold worker)."""
+        with pq.ParquetFile(FIXTURES_DIR / f"descriptor_fixture_{model}.parquet") as f:
+            return cls(f.read())
 
     @staticmethod
     def _context_key(context: str | None) -> str:
@@ -107,7 +99,7 @@ class FixtureDescriptorProvider:
         if toks and all(is_integer_token(t) for t in toks):
             return "\x00num"
         t = head_term(surface) if toks else self._context_key(context)
-        return t if t in self.table else "\x00oov"
+        return t if t in self._row else "\x00oov"
 
     def descriptors(
         self, surface: str, side: str, context: str | None = None
@@ -118,7 +110,8 @@ class FixtureDescriptorProvider:
             return list(DUMMY_DESCS)
         if key == "\x00oov":
             return list(OOV_DESCS)
-        return self.table[key][side]
+        row = self._sides[side][self._row[key]].values
+        return list(zip(row.field("desc").to_pylist(), row.field("score").to_pylist()))
 
     def cache_key(self, surface: str, context: str | None = None) -> str | None:
         """Typing-result memoization key: this provider's descriptors are a

@@ -25,9 +25,3 @@ def emit_bio(span_arr: list[int], predictions: list[str]) -> list[str]:
                 in_span = True
                 tags.append("B_" + predictions[entity_index])
     return tags
-
-
-def render_conll(words: list[str], tags: list[str]) -> str:
-    """CoNLL block rendering: ``word<space>tag`` lines + trailing blank line
-    (batched_main_NER.py:543-549)."""
-    return "\n".join(f"{w} {t}" for w, t in zip(words, tags)) + "\n\n"

@@ -6,9 +6,9 @@ plus the ``{root}/_lineage`` table that names which tokens are visible (the
 log of a Delta-style table: readers never list the stage directory). Iceberg
 is not on this classpath (BASELINE.md). The resume algebra:
 
-- every pages-derived row carries ``pbucket = pmod(xxhash64(url),
-  n_buckets)`` as a column (the analogue of Iceberg ``bucket(64, url)`` in
-  FIXTURES.md §1); one write task writes one file, whatever its buckets;
+- every pages-derived row carries ``pbucket = pmod(xxhash64(url), 64)``
+  as a column (the analogue of Iceberg ``bucket(64, url)`` in FIXTURES.md
+  §1); one write task writes one file, whatever its buckets;
 - COMMIT PROTOCOL (crash-safe, replay-idempotent): data files land first in
   the token's directory (overwritten, so a crashed attempt's files go), then
   one lineage row per bucket — (stage, wtoken, pbucket, row_count, checksum),
@@ -41,8 +41,8 @@ from pyspark.sql import functions as F
 N_BUCKETS_DEFAULT = 64
 
 
-def with_bucket(df: DataFrame, key: str = "url", n_buckets: int = N_BUCKETS_DEFAULT) -> DataFrame:
-    return df.withColumn("pbucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)))
+def with_bucket(df: DataFrame) -> DataFrame:
+    return df.withColumn("pbucket", F.pmod(F.xxhash64("url"), F.lit(N_BUCKETS_DEFAULT)))
 
 
 def _checksum_cols(df: DataFrame) -> list[str]:
@@ -72,14 +72,7 @@ def is_committed(spark: SparkSession, root: str, stage: str, wtoken: str) -> boo
     return lineage is not None and lineage.filter(F.col("wtoken") == wtoken).limit(1).count() > 0
 
 
-def write_stage(
-    df: DataFrame,
-    root: str,
-    stage: str,
-    key: str = "url",
-    n_buckets: int = N_BUCKETS_DEFAULT,
-    wtoken: str | None = None,
-) -> str:
+def write_stage(df: DataFrame, root: str, stage: str, wtoken: str | None = None) -> str:
     """Write a stage's rows, ``pbucket`` as a column, to its own directory
     ``{root}/{stage}/wtoken=<token>`` (one file per write task, no
     shuffle), then its lineage commit rows. Returns the wtoken used.
@@ -94,7 +87,7 @@ def write_stage(
     if wtoken is not None and is_committed(spark, root, stage, token):
         return token  # replayed epoch: already visible, skip entirely
     path = f"{root}/{stage}/wtoken={token}"
-    with_bucket(df, key, n_buckets).write.mode("overwrite").parquet(path)
+    with_bucket(df).write.mode("overwrite").parquet(path)
     # lineage FROM THE WRITTEN FILES (not the input plan), then the commit
     written = spark.read.parquet(path)
     lineage = (
@@ -125,18 +118,12 @@ def completed_buckets(spark: SparkSession, root: str, stage: str) -> DataFrame:
     return lineage.select("pbucket").distinct()
 
 
-def resume_filter(
-    pages: DataFrame,
-    root: str,
-    stage: str,
-    key: str = "url",
-    n_buckets: int = N_BUCKETS_DEFAULT,
-) -> DataFrame:
+def resume_filter(pages: DataFrame, root: str, stage: str) -> DataFrame:
     """Input rows whose bucket has NOT been committed for ``stage`` —
     broadcast anti-join (the completed-bucket list is tiny)."""
     spark = pages.sparkSession
     done = completed_buckets(spark, root, stage)
-    return with_bucket(pages, key, n_buckets).join(
+    return with_bucket(pages).join(
         F.broadcast(done), "pbucket", "left_anti"
     ).drop("pbucket")
 

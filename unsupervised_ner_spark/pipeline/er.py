@@ -51,6 +51,12 @@ def entity_occurrences(typed_mentions: DataFrame) -> DataFrame:
     ).filter((F.col("etype") != "OTHER") & (F.length("norm_surface") > 0))
 
 
+def node_id_col(norm_surface, etype):
+    """Exact canonical node id: md5(norm_surface | etype), a pure function
+    of content."""
+    return F.md5(F.concat_ws("|", norm_surface, etype))
+
+
 def exact_canonical(occurrences: DataFrame) -> DataFrame:
     """(norm_surface, etype) -> canonical node key + stats (hash agg)."""
     return (
@@ -59,7 +65,7 @@ def exact_canonical(occurrences: DataFrame) -> DataFrame:
             F.count("*").alias("n_mentions"),
             F.min("surface").alias("canonical_surface"),
         )
-        .withColumn("node_id", F.md5(F.concat_ws("|", "norm_surface", "etype")))
+        .withColumn("node_id", node_id_col("norm_surface", "etype"))
     )
 
 

@@ -19,11 +19,14 @@ mentions x sentence length.
 Scale notes (SURVEY.md §4.3):
 - This is a NARROW transformation: a 1000-executor run over 10^12 pages has
   no exchange until the cross-document ER stage.
-- Dimension data (descriptor fixture, signature vocab, entity map — tens of
-  MB) loads once per WORKER PROCESS from the packaged resource files (they
+- Dimension data (descriptor-fixture parquet, signature vocab, entity map)
+  loads once per WORKER PROCESS from the packaged resource files (they
   ship with the code, like model weights via --py-files), mirroring the
   reference's singleton model server (BatchedNerServer.py:27-29); see
-  ``_worker_tagger`` for why this beats SparkContext.broadcast here.
+  ``_worker_tagger`` for why this beats SparkContext.broadcast here. The
+  descriptor fixture stays an Arrow table in the worker: only a term ->
+  row index is Python objects, and a row becomes a descriptor list on a
+  typing-memo miss.
 - Swapping ``provider_factory`` to the HF BERT provider turns this same
   stage into the GPU inference stage — batch size governed by
   ``spark.sql.execution.arrow.maxRecordsPerBatch``.
@@ -88,12 +91,13 @@ def _tagged_schema(mention_type):
 TAGGED_SCHEMA = _tagged_schema(MENTION)
 TAGGED_SCHEMA_SLIM = _tagged_schema(MENTION_SLIM)
 
-# Worker-process-level tagger cache. Measured: shipping the ~30 MB fixture
-# dict via SparkContext.broadcast serializes every python worker through the
-# JVM's broadcast server (init up to 26 s/task at local[32] while the actual
-# tagging work is 0.3 s). Loading from the PACKAGED resource files instead —
-# they ship with the code via --py-files exactly like real model weights —
-# is embarrassingly parallel and cached once per worker process, surviving
+# Worker-process-level tagger cache. Measured: shipping the fixture as a
+# ~30 MB Python dict via SparkContext.broadcast serialized every python
+# worker through the JVM's broadcast server (init up to 26 s/task at
+# local[32] while the actual tagging work is 0.3 s). Loading the parquet
+# fixture from the PACKAGED resource files instead — they ship with the
+# code via --py-files exactly like real model weights — is embarrassingly
+# parallel and cached once per worker process, surviving
 # across tasks AND stages (so the typing memo stays warm too). This is the
 # moral equivalent of the reference's lazy singleton model server
 # (BatchedNerServer.py:27-29).
@@ -102,11 +106,13 @@ _WORKER_TAGGER_CACHE: dict = {}
 
 def _worker_tagger(model: str, provider_factory: Callable[[], object] | None) -> OracleTagger:
     """One tagger per worker process and model, rebuilt when the provider
-    factory changes. Each task unpickles its own copy of the factory, so a
-    tagger outlives its task only for a factory that compares equal to its
-    copies: a module-level function or class (pickled by reference) or a
-    frozen dataclass instance. Any other factory runs once per task, and
-    the tagger it replaces is dropped."""
+    factory changes. Without a factory the provider is
+    ``FixtureDescriptorProvider.load(model)``, which reads the model's
+    descriptor-fixture parquet into an Arrow table. Each task unpickles
+    its own copy of the factory, so a tagger outlives its task only for a
+    factory that compares equal to its copies: a module-level function or
+    class (pickled by reference) or a frozen dataclass instance. Any other
+    factory runs once per task, and the tagger it replaces is dropped."""
     cached = _WORKER_TAGGER_CACHE.get(model)
     if cached is None or cached[0] != provider_factory:
         provider = (

@@ -2,9 +2,9 @@
 
 The north rule runs the engine via ``spark-submit --py-files`` — code ships
 as a zip on ``sys.path`` (zipimport). Python can IMPORT from a zip, but the
-dimension data (signature vocabularies, descriptor-fixture parquets, pickle
-bundles) cannot be ``open()``-ed through zipimport, and the JVM parquet
-reader cannot see inside the zip at all. The standard Spark split applies:
+dimension data (signature vocabularies, descriptor-fixture parquets) cannot
+be ``open()``-ed through zipimport, and the JVM parquet reader cannot see
+inside the zip at all. The standard Spark split applies:
 
 - code:  ``--py-files unsupervised_ner_spark.zip``
 - data:  ``--archives resources.zip#nerres`` (extracted per-executor into

@@ -67,8 +67,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str):
-    """Read one driver-provided parquet table."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")

@@ -7,7 +7,7 @@ batch `er.triple_support` operator, whose url-disjoint merge contract is
 proven by ``test_triple_support_incremental_merge``.
 
 Why EXACT canonicalization per batch: the exact node id
-(md5(norm_surface | etype), `er.exact_canonical`) is a pure function of
+(md5(norm_surface | etype), `er.node_id_col`) is a pure function of
 content, so it is identical no matter where micro-batch boundaries fall —
 per-batch tables merge by simple addition. FUZZY ER (LSH + connected
 components) is corpus-global by definition: its cluster ids depend on
@@ -58,9 +58,7 @@ def batch_triple_support(docs: DataFrame) -> DataFrame:
     t = stages["triples"]
 
     def _id(surface, etype):
-        return F.md5(
-            F.concat_ws("|", er.norm_surface_col(F.col(surface)), F.col(etype))
-        )
+        return er.node_id_col(er.norm_surface_col(F.col(surface)), etype)
 
     canon = t.select(
         _id("subj", "subj_type").alias("subj_id"),
